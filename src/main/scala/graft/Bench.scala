@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -27,23 +26,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // conf-variant boards (e.g. the round-14 runtime-bloom-filter
-    // threshold experiment): SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — unset
-    // in the driver's runs, so the default board is untouched
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
     // untimed warmup across the distinct machinery (scan+agg, windows,
     // band joins, codegen expressions, k-means) at the SMALLEST fixture:
     // in-JVM repeat timing (graft.tools.QueryBench) showed first
@@ -70,13 +54,13 @@ object Bench {
     def sentinelCpu(): Double = {
       val t0 = System.nanoTime()
       // pmod bounds each term so the ANSI-mode sum can't overflow
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1000000)) as h").collect()
       (System.nanoTime() - t0) / 1e9
     }
     def sentinelShuffle(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 20000000L, 1L, cpus.toInt)
+      spark.range(0L, 20000000L, 1L, cpus)
         .selectExpr("pmod(xxhash64(id), 1000) as k")
         .groupBy("k").count().selectExpr("sum(count)").collect()
       (System.nanoTime() - t0) / 1e9
@@ -167,17 +151,25 @@ object Bench {
     }
     val best = scala.collection.mutable.Map.empty[String, Double]
     val bestSeg = scala.collection.mutable.Map.empty[String, Int]
+    // a row that throws in any pass is reported under "failed" with no
+    // time: its time-to-failure would read as a fast row
+    val failed = scala.collection.mutable.Set.empty[String]
     var timed = 0
     for (_ <- 1 to iters; name <- names) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val t = (System.nanoTime() - t0) / 1e9
       // each query is self-contained: drop its persisted intermediates
       // so 100 accumulated caches don't evict/slow later queries
       CacheScope.drain()
       spark.sharedState.cacheManager.clearCache()
-      if (t < best.getOrElse(name, Double.MaxValue)) {
+      if (!ok) failed += name
+      else if (t < best.getOrElse(name, Double.MaxValue)) {
         best(name) = t
         bestSeg(name) = track.size - 1 // segment AFTER track sample i
       }
@@ -185,11 +177,13 @@ object Bench {
       if (timed % sentinelEvery == 0) track += trackSample(minOf = 1)
     }
     track += trackSample(minOf = 2)
-    val results = names.map(n => n -> best(n)).toMap
+    val passed = names.filterNot(failed)
+    val results = passed.map(n => n -> best(n)).toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val segs = names.map(n => s"\"" + n + "\":" + bestSeg(n))
+    val segs = passed.map(n => s"\"" + n + "\":" + bestSeg(n))
       .mkString("{", ",", "}")
+    val failedJson = names.filter(failed).map(n => s"\"$n\"").mkString("[", ",", "]")
     val boardKeys = boardSentinels.zipWithIndex
     val trackJson = track.zipWithIndex.map { case (s, i) =>
       val bs = boardKeys.map { case (q, j) =>
@@ -214,7 +208,7 @@ object Bench {
     val catalogMd = java.security.MessageDigest.getInstance("MD5")
     names.sorted.foreach(n => catalogMd.update(n.getBytes("UTF-8")))
     val catalogHash = catalogMd.digest().map("%02x".format(_)).mkString
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","iters_min_of":$iters,"sentinels":$sent,"sentinel_every":$sentinelEvery,"sentinel_track":$trackJson,"query_seg":$segs,"git_head":"$gitHead","fixture_fingerprint":"$fixtureFp","catalog_hash":"$catalogHash","queries":$qs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","iters_min_of":$iters,"sentinels":$sent,"sentinel_every":$sentinelEvery,"sentinel_track":$trackJson,"query_seg":$segs,"git_head":"$gitHead","fixture_fingerprint":"$fixtureFp","catalog_hash":"$catalogHash","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // THE COMPLETE RECORD GOES TO A FILE (r17 verdict #5): the driver
     // captures only a ~2 KB tail of stdout, which truncated the
     // 203-row record mid-JSON every round — the official BENCH

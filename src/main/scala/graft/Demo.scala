@@ -4,7 +4,6 @@ import graft.exec.{PipelineRunner, TransformRegistry}
 import graft.model._
 import graft.sched.PipelineScheduler
 import graft.store.Repository
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end library demo: register a connection, define an
   * extract → SQL-transform → load pipeline over the fixture parquet,
@@ -15,14 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4, Map("spark.app.name" -> "graft-demo"))
 
     val work = java.nio.file.Files.createTempDirectory("graft-demo")
     val repo = new Repository(work.resolve("meta"))

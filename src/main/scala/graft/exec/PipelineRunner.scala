@@ -125,8 +125,7 @@ final class PipelineRunner(
           s"transform '${t.name}' has no upstream frame"))
         t.kind match {
           case "sql" =>
-            df.createOrReplaceTempView("input")
-            Some(spark.sql(t.sql.getOrElse(
+            Some(PipelineRunner.sqlOverInput(spark, df, t.sql.getOrElse(
               throw new IllegalArgumentException(s"transform '${t.name}': sql required"))))
           case "named" =>
             Some(registry(t.transformName.getOrElse(
@@ -148,5 +147,23 @@ final class PipelineRunner(
             soleConnectionLoad = sharedCkLoads.getOrElse(l.connectionId, 1) <= 1)
         else Sources.write(out, connection(l.connectionId), l)
         Some(df) // frame keeps flowing (a pipeline may load twice)
+    }
+}
+
+object PipelineRunner {
+  private val inputViewLock = new Object
+
+  /** Runs a `sql` step's query against its frame, bound as the session
+    * temp view `input`. The view name is shared by every pipeline on
+    * the session and the scheduler runs pipelines concurrently, so
+    * binding and analysis happen under one lock; analysis is eager,
+    * so the returned frame keeps its own input after the view is
+    * dropped.
+    */
+  private def sqlOverInput(spark: SparkSession, df: DataFrame, sql: String): DataFrame =
+    inputViewLock.synchronized {
+      df.createOrReplaceTempView("input")
+      try spark.sql(sql)
+      finally spark.catalog.dropTempView("input")
     }
 }

@@ -81,11 +81,7 @@ object Dedup {
     * tokenize+shingle+distinct — [[shingles3]]). Expects `text`.
     */
   private[graft] def withShingles(df: DataFrame, out: String): DataFrame =
-    if (sys.env.contains("SPARK_GRAFT_BANDS_REF")) // same-window A/B only
-      df.withColumn("__ws", split(col("text"), " "))
-        .withColumn(out, shinglesFromWords(col("__ws")))
-        .drop("__ws")
-    else df.withColumn(out, shingles3(split(col("text"), " ")))
+    df.withColumn(out, shingles3(split(col("text"), " ")))
 
   /** Number of seeded md5 digests the 6 minhash values are carved from:
     * each 32-hex digest yields four 8-hex (32-bit) chunks (the standard
@@ -127,10 +123,6 @@ object Dedup {
     // parity against the retained HOF reference
     // [[bandsForDocsReference]], and every band-based gate row
     // cross-checks end to end against the DuckDB oracle).
-    // A/B escape hatch for same-window measurement only (QueryBench
-    // with SPARK_GRAFT_BANDS_REF=1 times the HOF reference shape);
-    // unset in every driver/bench run, so the shipped path is native
-    if (sys.env.contains("SPARK_GRAFT_BANDS_REF")) return bandsForDocsReference(docs)
     val keep = docs.columns.filterNot(_ == "text").toSeq.map(col)
     val withMh = docs.withColumn("__mh",
       org.apache.spark.sql.graftaccess.ColumnBridge.column(

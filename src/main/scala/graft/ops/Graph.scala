@@ -258,15 +258,8 @@ object Graph {
     val e = pairs.persistScoped()
     val deg = degreesOf(e).persistScoped()
     val caps = Seq(1L, 2L)
-    // A/B escape hatch for same-window measurement only (QueryBench
-    // with SPARK_GRAFT_MULTICAP_REF=1 times the per-cap reference
-    // composition); unset in every driver/bench run
-    if (sys.env.contains("SPARK_GRAFT_MULTICAP_REF"))
-      return caps
-        .map(cap => cappedTrianglesWithDeg(e, deg, cap).withColumn("max_degree", lit(cap)))
-        .reduce(_ unionByName _)
-        .select($"max_degree", $"doc_id", $"n_triangles", $"excluded_hub")
-        .orderBy($"max_degree", $"doc_id")
+    // GraphSpec pins the shared enumeration against the per-cap
+    // [[cappedTrianglesWithDeg]] composition
     val (triCounts, _) = multiCapTriangleTables(e, deg, caps)
     caps
       .map { cap =>
@@ -570,13 +563,6 @@ object Graph {
     val e = pairs.persistScoped()
     val deg = degreesOf(e).persistScoped()
     val caps = Seq(1L, 2L)
-    if (sys.env.contains("SPARK_GRAFT_MULTICAP_REF")) // same-window A/B only
-      return caps
-        .map(cap => cappedClusteringWithDeg(e, deg, cap).withColumn("max_degree", lit(cap)))
-        .reduce(_ unionByName _)
-        .select($"max_degree", $"doc_id", $"degree", $"n_triangles",
-          $"clustering_permille", $"excluded_hub")
-        .orderBy($"max_degree", $"doc_id")
     val (triCounts, degCounts) = multiCapTriangleTables(e, deg, caps)
     caps
       .map { cap =>

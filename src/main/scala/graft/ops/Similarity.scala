@@ -544,9 +544,7 @@ object Similarity {
     * loop instead of the interpreted `transform(sequence, slice)` HOF
     * chain (CodegenFallback broke whole-stage codegen at the head of
     * every PQ encode scan — the Quantize1e4/MinHash6 failure mode).
-    * SubvecSlicesSpec pins parity with the HOF reference; call sites
-    * keep the reference reachable under the SPARK_GRAFT_SUBV_REF
-    * same-window A/B hatch.
+    * SubvecSlicesSpec pins parity with the HOF reference.
     */
   private def subvSlices(xq: Column): Column =
     org.apache.spark.sql.graftaccess.ColumnBridge.column(
@@ -555,8 +553,8 @@ object Similarity {
 
   /** Residual (xq − ccq) subvector slices in ONE fused loop — the
     * intermediate difference array of the zip_with+transform reference
-    * is never materialized. Same parity/hatch contract as
-    * [[subvSlices]].
+    * is never materialized. SubvecSlicesSpec pins parity with the
+    * zip_with+transform reference, as for [[subvSlices]].
     */
   private def residualSubvSlices(xq: Column, ccq: Column): Column =
     org.apache.spark.sql.graftaccess.ColumnBridge.column(
@@ -778,12 +776,8 @@ object Similarity {
         quantize1e4($"embedding").as("xq"))
       .persistScoped()
     // subvector slices, map-side: (vec_id, sub, sxq[pqSub]) — native
-    // fused slicing; HOF reference under the A/B hatch
-    val slicesCol =
-      if (sys.env.contains("SPARK_GRAFT_SUBV_REF")) expr(
-        s"transform(sequence(0, ${pqM - 1}), s -> slice(xq, s * $pqSub + 1, $pqSub))")
-      else subvSlices($"xq")
-    val subv = e.select($"vec_id", posexplode(slicesCol).as(Seq("sub", "sxq")))
+    // fused slicing (SubvecSlicesSpec pins it against the HOF slice shape)
+    val subv = e.select($"vec_id", posexplode(subvSlices($"xq")).as(Seq("sub", "sxq")))
       .persistScoped()
     // seed codebook: first pqK vectors' subvectors
     val c0 = subv.filter($"vec_id" < pqK)
@@ -1048,13 +1042,7 @@ object Similarity {
     val centCols = cents.select($"cid".as("centroid"), $"cq".as("ccq"))
     val joined = assigned.join(e.select($"vec_id", $"xq"), Seq("vec_id"))
       .join(broadcast(centCols), Seq("centroid"))
-    if (sys.env.contains("SPARK_GRAFT_SUBV_REF")) // same-window A/B only
-      joined
-        .select($"vec_id", zip_with($"xq", $"ccq", (x, c) => x - c).as("rq"))
-        .select($"vec_id", posexplode(expr(
-          s"transform(sequence(0, ${pqM - 1}), s -> slice(rq, s * $pqSub + 1, $pqSub))"))
-          .as(Seq("sub", "sxq")))
-    else joined.select($"vec_id",
+    joined.select($"vec_id",
       posexplode(residualSubvSlices($"xq", $"ccq")).as(Seq("sub", "sxq")))
   }
 
@@ -1120,16 +1108,8 @@ object Similarity {
     val qres = broadcast(probes)
       .join(queries.select($"qid", $"xq"), Seq("qid"))
       .join(broadcast(centCols), Seq("centroid"))
-    val qsub =
-      if (sys.env.contains("SPARK_GRAFT_SUBV_REF")) // same-window A/B only
-        qres
-          .select($"qid", $"centroid",
-            zip_with($"xq", $"ccq", (x, c) => x - c).as("rq"))
-          .select($"qid", $"centroid", posexplode(expr(
-            s"transform(sequence(0, ${pqM - 1}), s -> slice(rq, s * $pqSub + 1, $pqSub))"))
-            .as(Seq("sub", "sq")))
-      else qres.select($"qid", $"centroid",
-        posexplode(residualSubvSlices($"xq", $"ccq")).as(Seq("sub", "sq")))
+    val qsub = qres.select($"qid", $"centroid",
+      posexplode(residualSubvSlices($"xq", $"ccq")).as(Seq("sub", "sq")))
     val qd = qsub.join(broadcast(c1), Seq("sub"))
       .select($"qid", $"centroid", $"sub", $"cid".as("code"), sqd($"sq", $"cq").as("d"))
     // IVF candidates carry their list id so ADC joins the MATCHING
@@ -2523,13 +2503,11 @@ object Similarity {
     * broadcastable projections.
     */
   def hardNegatives(s: SparkSession, dir: String): DataFrame =
-    hardNegativesImpl(s, dir,
-      fourJoinRef = sys.env.contains("SPARK_GRAFT_HN_REF"))
+    hardNegativesImpl(s, dir, fourJoinRef = false)
 
-  /** [[hardNegatives]] with the attach formulation explicit, so
-    * HardNegativesJoinSpec can pin the merged two-join attach against
-    * the four-join reference in one JVM (the env hatch reads process
-    * state, which a spec can't toggle). */
+  /** [[hardNegatives]] with the attach formulation explicit:
+    * HardNegativesJoinSpec pins the shipped merged two-join attach
+    * against the four-join reference (`fourJoinRef = true`). */
   private[ops] def hardNegativesImpl(s: SparkSession, dir: String,
       fourJoinRef: Boolean): DataFrame = {
     import s.implicits._
@@ -2548,12 +2526,11 @@ object Similarity {
     // over the candidate stream (base and labels are key-unique on
     // vec_id, so merging the 1:1 attaches is row-identical; the merge
     // halves the broadcast builds and per-candidate hash probes).
-    // Four-join reference kept under SPARK_GRAFT_HN_REF for
-    // same-window A/B.
+    // HardNegativesJoinSpec pins it against the four-join reference.
     val candidates = broadcast(probes).join(assigned, Seq("centroid"))
       .filter($"vec_id" =!= $"qid")
     val scored0 =
-      if (fourJoinRef) // same-window A/B hatch + differential spec
+      if (fourJoinRef) // HardNegativesJoinSpec's reference
         candidates
           .join(base.select($"vec_id".as("qid"), $"xq".as("qxq"), $"n2".as("qn2")), Seq("qid"))
           .join(base.select($"vec_id", $"xq", $"n2"), Seq("vec_id"))

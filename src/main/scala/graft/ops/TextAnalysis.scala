@@ -40,13 +40,10 @@ object TextAnalysis {
 
   /** The bigram front end every bigram row shares ([[bigramStats]],
     * [[repetition]], [[lmRarity]], the DSIR token stream, the BPE
-    * merge loop): native by default, the HOF reference under the
-    * same-window A/B escape hatch (QueryBench with
-    * SPARK_GRAFT_NGRAMS_REF=1; unset in every driver/bench run).
+    * merge loop). WordNgramsSpec pins it against the HOF reference
+    * [[wordBigramsRef]].
     */
-  private[graft] def wordBigrams(ws: Column): Column =
-    if (sys.env.contains("SPARK_GRAFT_NGRAMS_REF")) wordBigramsRef(ws)
-    else wordNgrams(ws, 2)
+  private[graft] def wordBigrams(ws: Column): Column = wordNgrams(ws, 2)
 
   /** Per-document statistics: lengths, word counts, type-token ratio,
     * average word length (exact int arithmetic → deterministic double).
@@ -1953,23 +1950,13 @@ object TextAnalysis {
     */
   def dupNgramFrac(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // native fused 5-grams (wordNgrams); the HOF reference — with its
-    // sequence(1,0)-is-descending guard, the transform/array_join
-    // chain this site shipped through r17 — stays reachable under the
-    // same-window A/B hatch. Reference semantics differ from the
-    // native's only for null WORDS inside a window (array_join skips
-    // them, the native drops the window) — unobservable here because
-    // split() never yields null elements; WordNgramsSpec pins the
-    // null-free equivalence on random docs.
-    val grams5 =
-      if (sys.env.contains("SPARK_GRAFT_NGRAMS_REF"))
-        expr("""CASE WHEN size(ws) >= 5
-          |  THEN transform(sequence(1, size(ws) - 4), i -> array_join(slice(ws, i, 5), ' '))
-          |  ELSE array() END""".stripMargin)
-      else wordNgrams($"ws", 5)
+    // native fused 5-grams (wordNgrams). WordNgramsSpec pins them
+    // against the transform/array_join shape this site shipped through
+    // r17 on split()-derived input, the only input seen here (the two
+    // differ only for null words inside a window).
     val grams = Tables.t(s, dir, "documents")
       .withColumn("ws", split($"text", " "))
-      .select($"doc_id", explode(grams5).as("g"))
+      .select($"doc_id", explode(wordNgrams($"ws", 5)).as("g"))
       .distinct()
     val df = grams.groupBy($"g").agg(count(lit(1)).as("df"))
     grams.join(df, Seq("g"))
@@ -2853,11 +2840,11 @@ object TextAnalysis {
     * goes red instead of silently reordering merges.
     *
     * Cost: a 30k-merge budget at B=8 is ~3.7k driver round-trips
-    * instead of 30k (measured: graft.tools.BpeProbe, rounds/sec at
-    * B=1 vs B=8) — and each pass is still one vocabulary-sized job,
-    * never corpus-sized. Every `checkpointEvery` passes the cached
-    * vocab is locally checkpointed, truncating the chained-replace
-    * lineage (bounded plan depth at production budgets).
+    * instead of 30k (PLANS.md, "Batched BPE merges", records the
+    * design and its B=1 vs B=8 pins) — and each pass is still one
+    * vocabulary-sized job, never corpus-sized. Every `checkpointEvery`
+    * passes the cached vocab is locally checkpointed, truncating the
+    * chained-replace lineage (bounded plan depth at production budgets).
     */
   private[graft] def bpeTrainBatchedOn(s: SparkSession, docs: DataFrame,
       rounds: Int, batch: Int, checkpointEvery: Int = bpeCheckpointEvery)
@@ -3293,15 +3280,14 @@ object TextAnalysis {
     // rule), so rounds 2..R and the final margin pass run with ZERO
     // doc-keyed exchanges instead of two per round. The union had
     // discarded the featurize aggregation's partitioning anyway.
-    // A/B hatch: SPARK_GRAFT_PERC_REF=1 times the unpartitioned shape.
-    val fRaw = labeled
+    val f = labeled
       .select($"doc_id", $"y", explode($"ws").as("w"))
       .withColumn("b", substring(md5($"w"), 1, 2))
       .groupBy($"doc_id", $"y", $"b").agg(count(lit(1)).as("c"))
       .unionAll(labeled.select($"doc_id", $"y", lit("__bias").as("b"),
         lit(1L).as("c")))
-    val f = (if (sys.env.contains("SPARK_GRAFT_PERC_REF")) fRaw
-      else fRaw.repartition($"doc_id")).persistScoped()
+      .repartition($"doc_id")
+      .persistScoped()
     def marginsUnder(wts: Map[String, Long]): DataFrame = {
       val wDf = broadcast(wts.toSeq.toDF("b", "w"))
       f.join(wDf, Seq("b"))

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Index-growth sweep for the exact-dedup admission index
@@ -75,14 +76,7 @@ object AdmitSweep {
     val docTokens = if (args.length > 2) args(2).toInt else 40
     val compactEvery = if (args.length > 3) args(3).toInt else 0
     val mode = if (args.length > 4) args(4) else "bucketed"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val base = java.nio.file.Files.createTempDirectory("graft-admit-sweep")
     val idx = s"$base/idx"

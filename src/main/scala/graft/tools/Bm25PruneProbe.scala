@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures whether `saveBm25Index`'s term-clustered row groups
@@ -56,14 +57,7 @@ object Bm25PruneProbe {
     val nQueries = if (args.length > 3) args(3).toInt else 30
     val nBuckets = if (args.length > 4) args(4).toInt else 4
     val blockKb = if (args.length > 5) args(5).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
     // many row groups per bucket file — the 100 TB file shape, scaled
     spark.sparkContext.hadoopConfiguration.setInt("parquet.block.size", blockKb * 1024)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Mixture-of-Gaussians embedding fixture — the CLUSTERED complement
   * to the driver's near-random `embeddings` table, for measuring the
@@ -42,14 +42,7 @@ object ClusteredFixture {
     val k = if (args.length > 2) args(2).toInt else 64
     val dim = if (args.length > 3) args(3).toInt else 64
     val sigma = if (args.length > 4) args(4).toDouble else 0.05
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val rng = new java.util.Random(20260814L)

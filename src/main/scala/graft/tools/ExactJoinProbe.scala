@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops.Dedup
 import graft.CacheScope._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -122,14 +122,7 @@ object ExactJoinProbe {
     val sfDir = args(0)
     val iters = if (args.length > 1) args(1).toInt else 3
     val benchRows = if (args.length > 2) args(2).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val docs = Tables.t(spark, sfDir, "documents")

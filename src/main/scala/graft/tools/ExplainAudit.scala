@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Catalog
-import org.apache.spark.sql.SparkSession
+import graft.{Catalog, GraftSession}
 
 /** Plan-quality audit: prints the formatted physical plan of selected
   * catalog queries so pushdown/broadcast/codegen can be inspected.
@@ -26,13 +25,7 @@ object ExplainAudit {
       "q_text_bigram_lm", "q_evt_retention", "q_evt_transitions", "q_evt_wau",
       "q_feat_zscore", "q_feat_ntile",
       "q_text_perceptron", "q_emb_pca")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     names.foreach { n =>
       println(s"===== $n =====")

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 
 /** IVF recall/cost sweep at deployment-scale parameters: trains a
   * codebook of the given size and probes each nprobe width, printing
@@ -19,14 +19,7 @@ object IvfSweep {
     val iters = if (args.length > 1) args(1).toInt else 2
     val nprobes = if (args.length > 2) args(2).split(",").toSeq.map(_.toInt) else Seq(1, 2, 4, 8)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val bf = Similarity.bruteForceTopK(spark, sfDir).filter("rank <= 3")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     spark.sharedState.cacheManager.clearCache()

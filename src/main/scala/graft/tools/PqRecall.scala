@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 
 /** PQ-ADC recall vs the exact brute-force baseline — the measurement
   * the catalog row (`q_sim_pq`, differential vs DuckDB) deliberately
@@ -21,14 +21,7 @@ import org.apache.spark.sql.SparkSession
 object PqRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     import org.apache.spark.sql.functions.col
 
     // pqAdc queries every vec_id % 50 == 0; align all baselines to it

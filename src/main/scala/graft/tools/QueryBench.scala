@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Catalog
-import org.apache.spark.sql.SparkSession
+import graft.{Catalog, GraftSession}
 
 /** Single-query repeated timing (variance-aware companion to
   * graft.Bench): runs one catalog query N times in one JVM, printing
@@ -16,22 +15,7 @@ object QueryBench {
     val name = args(0)
     val iters = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // conf-variant timing (same contract as graft.Bench):
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val fn = Catalog.byName(name).fn
     val times = (1 to iters).map { i =>
       val t0 = System.nanoTime()

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-only fixture scale-up: replicates a driver-generated sf
@@ -66,18 +67,11 @@ object ScaleUp {
       case Array(a, b, c, d, e, f) => (a, b, c, d.toInt, e.toInt, f.toInt)
     }
     val reps = repStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS) (see Tables.t): read it as
-      // raw long nanos and write it back as plain INT64 — Tables.t's
-      // `ts div 1000` conversion handles both representations
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts is parquet TIMESTAMP(NANOS) (see Tables.t): read it as
+    // raw long nanos and write it back as plain INT64 — Tables.t's
+    // `ts div 1000` conversion handles both representations
+    val spark = GraftSession.local(
+      extra = Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 
     def replicate(table: String, finish: DataFrame => DataFrame = identity)(
         xform: (DataFrame, Int) => DataFrame): Unit = {

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Index-growth sweep for the SEMANTIC dedup admission index
@@ -50,14 +51,7 @@ object SemAdmitSweep {
     val compactEvery = if (args.length > 4) args(4).toInt else 0
     val rebucketAfter = if (args.length > 5) args(5).toInt else 0
     val rebucketTo = if (args.length > 6) args(6).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val base = java.nio.file.Files.createTempDirectory("graft-semadmit-sweep")
     val idx = s"$base/idx"

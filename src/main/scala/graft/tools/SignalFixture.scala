@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Signal-bearing classifier fixture (bench-only, like [[ScaleUp]]):
@@ -41,14 +41,7 @@ object SignalFixture {
     val out = args(1)
     val signalPct = if (args.length > 2) args(2).toInt else 30
     require(signalPct > 0 && signalPct <= 100, s"signalPct in (0,100]: $signalPct")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val pos = graft.ops.TextAnalysis.perceptronPosSources

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Pins COVERAGE.md to the live catalog so the doc can never drift
   * from the code again (the r8 and r10 verdicts both caught a stale
@@ -77,6 +78,22 @@ class CoverageSpec extends AnyFunSuite {
     val n = Catalog.entries.size
     assert(readme.contains(s"the operator catalog ($n queries)"),
       s"README.md catalog count != $n live catalog entries — update the line")
+  }
+
+  test("no shipping operator reads process env (one code path per query)") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft/ops")
+    assert(java.nio.file.Files.isDirectory(root), s"$root missing")
+    val envRead = """sys\.env|System\.getenv""".r
+    val hits = {
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally files.close()
+    }.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+        .collect { case (line, i) if envRead.findFirstIn(line).isDefined =>
+          s"${root.relativize(f)}:${i + 1}" }
+    }
+    assert(hits.isEmpty, s"env reads in graft/ops: ${hits.mkString(", ")}")
   }
 
   test("catalog names are unique (duplicate entries would shadow in byName)") {

@@ -47,6 +47,42 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(h.last.finishedAt.isDefined)
   }
 
+  test("concurrent sql pipelines on one session each load only their own input") {
+    val (repo, dataDir) = setup()
+    val n = 6
+    (0 until n).foreach { i =>
+      (0 until 5).map(j => (j.toLong, s"t$i")).toDF("id", "tag")
+        .write.mode("overwrite").parquet(s"$dataDir/race_src_$i")
+    }
+    val specs = (0 until n).map { i =>
+      pipeline(
+        s"""{"id":"race$i","name":"race","steps":[
+           |{"stepType":"extract","name":"src","order":1,"connectionId":"local","path":"race_src_$i"},
+           |{"stepType":"transform","name":"t","order":2,"kind":"sql","sql":"SELECT id, tag FROM input"},
+           |{"stepType":"load","name":"sink","order":3,"connectionId":"local","path":"race_out_$i","mode":"replace"}
+           |]}""".stripMargin)
+    }
+    val runner = new PipelineRunner(spark, repo)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    val wrong = try {
+      (1 to 5).flatMap { _ =>
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val runs = specs.map { spec =>
+          pool.submit(new java.util.concurrent.Callable[RunResult] {
+            def call(): RunResult = { start.await(); runner.run(spec) }
+          })
+        }
+        start.countDown()
+        runs.foreach(_.get())
+        (0 until n).filter { i =>
+          spark.read.parquet(s"$dataDir/race_out_$i").select("tag").as[String]
+            .collect().toSet != Set(s"t$i")
+        }
+      }
+    } finally pool.shutdown()
+    assert(wrong.isEmpty, s"pipelines that loaded another pipeline's rows: $wrong")
+  }
+
   test("audited transforms record per-stage retention counts in history") {
     val (repo, dataDir) = setup()
     val spec = pipeline(

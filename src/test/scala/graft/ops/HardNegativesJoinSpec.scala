@@ -9,8 +9,7 @@ import graft.SparkSpec
   * 1:1 attaches cannot change the candidate set, the label filter, or
   * any cosine. The catalog row's DuckDB oracle checks the same thing
   * end-to-end per scale factor; this spec keeps the equivalence
-  * exercised in-suite (both formulations in ONE JVM — the
-  * SPARK_GRAFT_HN_REF env hatch can't be toggled from a test).
+  * exercised in-suite, both formulations in one JVM.
   */
 class HardNegativesJoinSpec extends SparkSpec {
 
