@@ -2499,8 +2499,11 @@ object Similarity {
     *
     * Same 100 TB shape as the ivf row (broadcast ≤16-row codebook,
     * inverted-list equi-join bounds candidates to ~nprobe/k of the
-    * corpus); the label table rides the same join as two narrow
-    * broadcastable projections.
+    * corpus); the label joins the vector payload once (only the narrow
+    * (vec_id, label) side is broadcast), and that merged
+    * (vec_id, xq, n2, label) table attaches once per candidate
+    * endpoint, its join strategy left to the planner — it is corpus
+    * sized, so a forced broadcast would hit the broadcast size limit.
     */
   def hardNegatives(s: SparkSession, dir: String): DataFrame =
     hardNegativesImpl(s, dir, fourJoinRef = false)
@@ -2525,7 +2528,7 @@ object Similarity {
     // table joined once per endpoint instead of four separate joins
     // over the candidate stream (base and labels are key-unique on
     // vec_id, so merging the 1:1 attaches is row-identical; the merge
-    // halves the broadcast builds and per-candidate hash probes).
+    // halves the join builds and per-candidate hash probes).
     // HardNegativesJoinSpec pins it against the four-join reference.
     val candidates = broadcast(probes).join(assigned, Seq("centroid"))
       .filter($"vec_id" =!= $"qid")
@@ -2539,10 +2542,10 @@ object Similarity {
       else {
         val withLab = base.join(broadcast(labels), Seq("vec_id"))
         candidates
-          .join(broadcast(withLab.select($"vec_id".as("qid"), $"xq".as("qxq"),
-            $"n2".as("qn2"), $"label".as("q_label"))), Seq("qid"))
-          .join(broadcast(withLab.select($"vec_id", $"xq", $"n2",
-            $"label".as("neg_label"))), Seq("vec_id"))
+          .join(withLab.select($"vec_id".as("qid"), $"xq".as("qxq"),
+            $"n2".as("qn2"), $"label".as("q_label")), Seq("qid"))
+          .join(withLab.select($"vec_id", $"xq", $"n2",
+            $"label".as("neg_label")), Seq("vec_id"))
       }
     val scored = scored0
       .filter($"neg_label" =!= $"q_label")

@@ -334,10 +334,16 @@ object TextAnalysis {
       .join(broadcast(qterms), Seq("term"))
       .groupBy($"term", $"doc_id", $"len").agg(count(lit(1)).as("tf"))
       .persistScoped()
-    val dfreq = postings.groupBy($"term").agg(count(lit(1)).as("df"))
-    bm25Tail(postings.crossJoin(broadcast(stats)), dfreq, queries,
+    bm25Tail(postings.crossJoin(broadcast(stats)), bm25Df(postings), queries,
       $"n", $"toks")
   }
+
+  /** Each term's document frequency over a postings frame (one row per
+    * (term, doc)): its row count. ONE expression for the in-row rows and
+    * the frozen serve, whose pruned postings scan already holds every
+    * row of every query term — so the index stores no df table. */
+  private def bm25Df(postings: DataFrame): DataFrame =
+    postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
 
   /** The fixed BM25 serving batch: replica-0 doc_ids ≡ 3 (mod 97),
     * first 8 distinct tokens each — shared by the in-row [[bm25]] and
@@ -358,12 +364,12 @@ object TextAnalysis {
     * op-order argument lives in one place). `n`/`toks` are the 1-row
     * broadcast-cross columns in the in-row version and driver literals
     * in the serving version — same exact longs, same double ops.
-    * Postings must carry (term, doc_id, len, tf); dfreq (term, df);
-    * queries (query_id, term).
+    * Postings must carry (term, doc_id, len, tf); dfq (term, df) —
+    * [[bm25Df]] on both paths; queries (query_id, term).
     */
-  private def bm25Tail(postings: DataFrame, dfreq: DataFrame,
+  private def bm25Tail(postings: DataFrame, dfq: DataFrame,
       queries: DataFrame, n: Column, toks: Column): DataFrame =
-    bm25TopCut(bm25Ranks(postings, dfreq, queries, n, toks))
+    bm25TopCut(bm25Ranks(postings, dfq, queries, n, toks))
 
   /** The gate rows' top-5 presentation cut over a [[bm25Ranks]] frame. */
   private def bm25TopCut(ranked: DataFrame): DataFrame = {
@@ -403,7 +409,7 @@ object TextAnalysis {
     * external comparator and this mode compute the same weight; the
     * spec pins ranks against an independent recomputation).
     */
-  private def bm25Ranks(postings: DataFrame, dfreq: DataFrame,
+  private def bm25Ranks(postings: DataFrame, dfq: DataFrame,
       queries: DataFrame, n: Column, toks: Column,
       idfMode: String = "exact"): DataFrame = {
     val s = postings.sparkSession
@@ -423,7 +429,7 @@ object TextAnalysis {
         ($"len".cast("double") * n.cast("double") / toks.cast("double")))
     val w = idf * (($"tf".cast("double") * lit(2.2)) / denom)
     val hits = postings
-      .join(broadcast(dfreq), Seq("term"))
+      .join(broadcast(dfq), Seq("term"))
       .join(broadcast(queries), Seq("term"))
       .select($"query_id", $"doc_id", w.as("w"))
       .groupBy($"query_id", $"doc_id")
@@ -550,8 +556,7 @@ object TextAnalysis {
       .join(broadcast(qterms), Seq("term"))
       .groupBy($"term", $"doc_id", $"len").agg(count(lit(1)).as("tf"))
       .persistScoped()
-    val dfreq = postings.groupBy($"term").agg(count(lit(1)).as("df"))
-    bm25Ranks(postings.crossJoin(broadcast(stats)), dfreq, queries,
+    bm25Ranks(postings.crossJoin(broadcast(stats)), bm25Df(postings), queries,
       $"n", $"toks", idfMode)
   }
 
@@ -586,24 +591,69 @@ object TextAnalysis {
   private val bm25BucketsMarker = "_bm25_buckets"
   private val bm25IntentMarker = "_bm25_compact_intent"
 
+  /** The postings layout's schema, partition columns included. Every
+    * read of a layout this module wrote declares it, so no read pays a
+    * footer-inference job. */
+  private val bm25PostingsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "term STRING, doc_id BIGINT, len BIGINT, tf BIGINT, batch BIGINT, bucket INT")
+
+  /** The postings of generations `ids` of the index at `path`, read
+    * under [[bm25PostingsSchema]] (`batch`/`bucket` as columns). */
+  private def readBm25Postings(s: SparkSession, path: String,
+      ids: Seq[Long]): DataFrame =
+    s.read.schema(bm25PostingsSchema).option("basePath", s"$path/postings")
+      .parquet(ids.map(b => s"$path/postings/batch=$b"): _*)
+
+  /** The per-batch df sub earlier layouts wrote beside the postings. A
+    * term's df is now the row count of its postings ([[bm25Df]]), so
+    * readers ignore the sub and every writer verb deletes it after
+    * intent recovery — idempotent, so a crash mid-delete is safe. */
+  private def dropLegacyDfreq(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Unit =
+    graft.connect.Hfs.deleteIfExists(fs,
+      new org.apache.hadoop.fs.Path(path, "dfreq"))
+
+  /** Write postings rows (term, doc_id, len, tf, bucket) to `target`
+    * in the index layout: layout-keyed repartition (one file per bucket
+    * per job), then term-clustered WITHIN each bucket: parquet
+    * row-group min/max on term only prunes if rows are sorted. The sort
+    * keys MUST lead with the partition column: a dynamic-partition
+    * write requires ordering by its partition columns, and when the
+    * child's ordering doesn't already satisfy that, Spark inserts its
+    * own Sort(bucket) ON TOP — silently destroying the term clustering
+    * (tools/Bm25PruneProbe caught exactly this: r15's
+    * sort(term, doc_id) produced row groups whose term range spanned
+    * the whole bucket, byte-identical to an unsorted write).
+    */
+  private def writeBm25Postings(postings: DataFrame, target: String): Unit =
+    postings.repartition(col("bucket"))
+      .sortWithinPartitions(col("bucket"), col("term"), col("doc_id"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(target)
+
   /** Postings rows (term, doc_id, len, tf, bucket) for one corpus
     * slice, plus the slice's exact (docCount, tokenCount) — ONE
     * expression tree shared by [[saveBm25Index]] and
     * [[maintainBm25Index]], so append ≡ rebuild reduces to the
-    * additivity of the three stats (df, N, tokens are sums over
-    * disjoint batches), not to two code paths agreeing.
+    * additivity of the stats (N and tokens are sums over disjoint
+    * batches, and a term's df counts its postings rows across them),
+    * not to two code paths agreeing. A batch is two writes: its
+    * postings directory, then its stats file.
     */
   private def writeBm25Batch(docs: DataFrame, path: String,
       batchId: Long, buckets: Int): Unit = {
     val s = docs.sparkSession
     import s.implicits._
-    val words = docs.select($"doc_id", split($"text", " ").as("words"))
+    val idType = docs.schema("doc_id").dataType
+    require(Seq(org.apache.spark.sql.types.LongType,
+        org.apache.spark.sql.types.IntegerType).contains(idType),
+      s"BM25 index: doc_id must be BIGINT or INT, got ${idType.sql}")
+    val words = docs.select($"doc_id".cast("long").as("doc_id"),
+      split($"text", " ").as("words"))
     val postings = words
       .select($"doc_id", size($"words").cast("long").as("len"),
         explode($"words").as("term"))
       .groupBy($"term", $"doc_id", $"len").agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(hash($"term"), lit(buckets)))
-      .persistScoped() // feeds the postings write AND the df rollup
     val (n, toks) = words
       .agg(count(lit(1)), coalesce(sum(size($"words").cast("long")), lit(0L)))
       .as[(Long, Long)].head()
@@ -611,30 +661,7 @@ object TextAnalysis {
     // break schema inference on later reads (the admission-index rule),
     // and contributing (0, 0) to the stats is the same as not existing
     if (n == 0L) return
-    // layout-keyed repartition (one file per bucket per job), then
-    // term-clustered WITHIN each bucket: parquet row-group min/max on
-    // term only prunes if rows are sorted. The sort keys MUST lead
-    // with the partition column: a dynamic-partition write requires
-    // ordering by its partition columns, and when the child's
-    // ordering doesn't already satisfy that, Spark inserts its own
-    // Sort(bucket) ON TOP — silently destroying the term clustering
-    // (tools/Bm25PruneProbe caught exactly this: r15's
-    // sort(term, doc_id) produced row groups whose term range spanned
-    // the whole bucket, byte-identical to an unsorted write)
-    postings.repartition($"bucket")
-      .sortWithinPartitions($"bucket", $"term", $"doc_id")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings/batch=$batchId")
-    // dfreq is bucketed by the SAME hash(term) modulus as postings:
-    // the vocabulary is corpus-scale at 100 TB (a full-vocab scan per
-    // serving batch would dwarf the pruned postings read), and one
-    // shared bucket function means the serve's single driver-side
-    // bucket list prunes BOTH scans at planning time
-    postings.groupBy($"term", $"bucket").agg(count(lit(1)).as("df"))
-      .repartition($"bucket")
-      .sortWithinPartitions($"bucket", $"term")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/dfreq/batch=$batchId")
+    writeBm25Postings(postings, s"$path/postings/batch=$batchId")
     graft.connect.Hfs.writeSmall(graft.connect.Hfs.fs(s, path),
       new org.apache.hadoop.fs.Path(path, s"stats/batch=$batchId"),
       s"$n $toks", overwrite = true)
@@ -653,22 +680,18 @@ object TextAnalysis {
     *    hive-partitioned by `hash(term) mod buckets` inside a
     *    per-batch directory (the replay/idempotence unit),
     *    repartitioned on the layout key before the write (one file per
-    *    bucket per job) and term-clustered within each bucket;
-    *  - `dfreq/batch=<id>/bucket=<h>/` — (term, df) PER BATCH,
-    *    hive-partitioned by the SAME `hash(term) mod buckets` as the
-    *    postings (one driver-side bucket list prunes both scans at
-    *    planning time — the vocabulary is corpus-scale at 100 TB, so
-    *    an unpruned per-batch vocab scan would dwarf the pruned
-    *    postings read); a term's global df is the exact long sum over
+    *    bucket per job) and term-clustered within each bucket. A
+    *    term's global df is the count of its postings rows across
     *    batch directories (each doc lives in exactly one batch),
-    *    rolled up at serve time on the pruned rows;
+    *    rolled up at serve time on the rows the pruned scan already
+    *    read — so no df table is stored;
     *  - `stats/batch=<id>` — "N totalTokens" exact longs per batch;
     *    the corpus constants are the driver-side sum of these files
     *    (bounded by the batch count, which compaction folds);
     *  - `_bm25_buckets` — the bucket modulus, fixed at creation
     *    (every batch must hash terms with the same function).
     *
-    * All three statistics are ADDITIVE, so append ≡ rebuild holds
+    * All the statistics are ADDITIVE, so append ≡ rebuild holds
     * EXACTLY — an index grown batch-by-batch serves bit-identical
     * scores to one built in a single shot (InvariantSpec pins it).
     * This is the overwrite verb: any prior index at `path` is
@@ -679,7 +702,8 @@ object TextAnalysis {
     val s = docs.sparkSession
     require(buckets > 0, s"saveBm25Index: buckets must be positive, got $buckets")
     val fs = graft.connect.Hfs.fs(s, path)
-    Seq("postings", "dfreq", "stats", bm25IntentMarker).foreach { sub =>
+    dropLegacyDfreq(fs, path)
+    (bm25Subs :+ bm25IntentMarker).foreach { sub =>
       graft.connect.Hfs.deleteIfExists(fs,
         new org.apache.hadoop.fs.Path(path, sub))
     }
@@ -697,7 +721,7 @@ object TextAnalysis {
     *
     * Replay semantics are IDEMPOTENT PER BATCH ID (the
     * [[graft.ops.Dedup.admitExactDedup]] discipline): the batch's own
-    * postings/dfreq/stats entries are deleted up front, so a batch
+    * postings/stats entries are deleted up front, so a batch
     * replayed after a partial failure contributes exactly once —
     * stats can never double-count. Pass the foreachBatch batch id;
     * non-streaming callers pass any monotone non-negative sequence
@@ -705,9 +729,10 @@ object TextAnalysis {
     * must be DISJOINT corpus slices — appending the same doc under two
     * batch ids double-counts it, like any append sink.
     *
-    * A batch interrupted MID-WRITE (postings landed, dfreq/stats not)
-    * must be replayed under the same id before the index is served —
-    * serving the torn middle would undercount that batch's dfs. The
+    * A batch interrupted MID-WRITE (postings landed, stats not) must
+    * be replayed under the same id before the index is served —
+    * serving the torn middle would count that batch's postings in the
+    * dfs without its documents in N and the token total. The
     * streaming hook gets this for free: a crash inside foreachBatch
     * leaves the tick's offsets uncommitted, so the restarted drain
     * replays the same batch id and the delete-own-generation step
@@ -740,6 +765,7 @@ object TextAnalysis {
         graft.connect.Hfs.writeSmall(fs, marker, b.toString, overwrite = true)
         b
       }
+    dropLegacyDfreq(fs, path)
     // idempotence: drop any prior attempt of THIS batch before writing
     graft.connect.GenerationalIndex.clearGeneration(fs, path,
       bm25Subs, batchId)
@@ -748,11 +774,11 @@ object TextAnalysis {
 
   /** Compact a BM25 index: fold every batch directory EXCEPT the
     * newest live one into a single consolidated generation (negative
-    * batch id) — postings re-bucketed and re-sorted, per-batch dfreq
-    * SUMMED per term (exact longs — the consolidated df is by
-    * construction the value a rebuild would compute), stats files
-    * summed into one. The newest non-negative batch stays untouched
-    * because it is the only batch a restarted stream can replay, and
+    * batch id) — postings re-bucketed and re-sorted (each term's df
+    * stays its postings row count, the value a rebuild would compute),
+    * stats files summed into one. The newest non-negative batch stays
+    * untouched because it is the only batch a restarted stream can
+    * replay, and
     * replay safety is "delete your own batch=<id> entries, recompute"
     * (the [[graft.ops.Dedup.compactExactDedupIndex]] contract). Run
     * between stream runs or from the scheduler, never concurrently
@@ -779,30 +805,15 @@ object TextAnalysis {
     import graft.connect.{GenerationalIndex => GI}
     val fs = graft.connect.Hfs.fs(s, path)
     recoverBm25Compaction(s, path)
+    dropLegacyDfreq(fs, path)
     val plan = GI.foldPlan(GI.generations(fs, path, "postings"))
       .getOrElse(return 0)
     val (gen, fold) = (plan.gen, plan.fold)
     // stale temps from a pre-intent crash are invisible garbage:
     // GI.staging clears each before the stage writes
     GI.staging(fs, path, "postings")
-    s.read.option("basePath", s"$path/postings")
-      .parquet(fold.map(b => s"$path/postings/batch=$b"): _*)
-      .drop("batch")
-      .repartition(col("bucket"))
-      // partition column leads the sort keys (see writeBm25Batch)
-      .sortWithinPartitions(col("bucket"), col("term"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings/.compact-tmp")
-    val dfSrc = fold.filter(b => graft.connect.Hfs.isDir(fs,
-      new org.apache.hadoop.fs.Path(path, s"dfreq/batch=$b")))
-    GI.staging(fs, path, "dfreq")
-    s.read.option("basePath", s"$path/dfreq")
-      .parquet(dfSrc.map(b => s"$path/dfreq/batch=$b"): _*)
-      .groupBy(col("term"), col("bucket")).agg(sum(col("df")).as("df"))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("term"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/dfreq/.compact-tmp")
+    writeBm25Postings(readBm25Postings(s, path, fold).drop("batch"),
+      s"$path/postings/.compact-tmp")
     val summed = fold.flatMap { b =>
       val p = new org.apache.hadoop.fs.Path(path, s"stats/batch=$b")
       if (graft.connect.Hfs.isFile(fs, p))
@@ -820,9 +831,9 @@ object TextAnalysis {
     fold.size
   }
 
-  /** The three generational subs of a BM25 layout — postings + per-
-    * batch dfreq + per-batch stats, compacted and replayed as a unit. */
-  private val bm25Subs = Seq("postings", "dfreq", "stats")
+  /** The generational subs of a BM25 layout — postings + per-batch
+    * stats, compacted and replayed as a unit. */
+  private val bm25Subs = Seq("postings", "stats")
 
   /** Replay a crashed [[compactBm25Index]] to completion if its intent
     * marker exists (no-op otherwise — one existence check). Called by
@@ -885,7 +896,7 @@ object TextAnalysis {
     * geometry to reason about, only the commit protocol.
     *
     *  - folded generations consolidate into one re-hashed negative
-    *    generation (per-term dfs summed exactly, like compaction);
+    *    generation (postings re-hashed, stats summed, like compaction);
     *  - the newest LIVE generation is re-hashed IN PLACE under its own
     *    batch id — a restarted stream replaying that batch deletes its
     *    own generation and recomputes under the new marker, so replay
@@ -910,6 +921,7 @@ object TextAnalysis {
       s"$path is not a BM25 index (no $bm25BucketsMarker marker) — " +
         "build one with saveBm25Index or maintainBm25Index")
     recoverBm25Compaction(s, path)
+    dropLegacyDfreq(fs, path)
     // already at the target modulus: a scheduled rebucket pipeline must
     // be a cheap no-op after the migration (the compact_* foldPlan-None
     // convention), not an unbounded full-index rewrite every run
@@ -922,29 +934,14 @@ object TextAnalysis {
     val plan = GI.migratePlan(gens)
     val (live, fold) = (plan.live, plan.fold)
     // clear stale staging from any prior abandoned attempt
-    Seq("postings/.compact-tmp", "postings/.rebucket-live-tmp",
-      "dfreq/.compact-tmp", "dfreq/.rebucket-live-tmp", "stats/.compact-tmp")
+    Seq("postings/.compact-tmp", "postings/.rebucket-live-tmp", "stats/.compact-tmp")
       .foreach(sub => Hfs.deleteIfExists(fs, new Path(path, sub)))
-    def rehash(df: DataFrame): DataFrame =
-      df.withColumn("bucket", pmod(hash($"term"), lit(newBuckets)))
+    def rehash(ids: Seq[Long], tmp: String): Unit =
+      writeBm25Postings(readBm25Postings(s, path, ids).drop("batch")
+        .withColumn("bucket", pmod(hash($"term"), lit(newBuckets))),
+        s"$path/postings/$tmp")
     if (fold.nonEmpty) {
-      rehash(s.read.option("basePath", s"$path/postings")
-          .parquet(fold.map(b => s"$path/postings/batch=$b"): _*)
-          .drop("batch"))
-        .repartition($"bucket")
-        .sortWithinPartitions($"bucket", $"term", $"doc_id")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/postings/.compact-tmp")
-      val dfSrc = fold.filter(b => Hfs.isDir(fs,
-        new Path(path, s"dfreq/batch=$b")))
-      if (dfSrc.nonEmpty)
-        rehash(s.read.option("basePath", s"$path/dfreq")
-            .parquet(dfSrc.map(b => s"$path/dfreq/batch=$b"): _*)
-            .groupBy($"term").agg(sum($"df").as("df")))
-          .repartition($"bucket")
-          .sortWithinPartitions($"bucket", $"term")
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/dfreq/.compact-tmp")
+      rehash(fold, ".compact-tmp")
       val summed = fold.flatMap { b =>
         val p = new Path(path, s"stats/batch=$b")
         if (Hfs.isFile(fs, p))
@@ -955,21 +952,7 @@ object TextAnalysis {
         Hfs.writeSmall(fs, new Path(path, "stats/.compact-tmp"),
           s"${summed.map(_(0)).sum} ${summed.map(_(1)).sum}", overwrite = true)
     }
-    live.foreach { lid =>
-      rehash(s.read.option("basePath", s"$path/postings")
-          .parquet(s"$path/postings/batch=$lid").drop("batch"))
-        .repartition($"bucket")
-        .sortWithinPartitions($"bucket", $"term", $"doc_id")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/postings/.rebucket-live-tmp")
-      if (Hfs.isDir(fs, new Path(path, s"dfreq/batch=$lid")))
-        rehash(s.read.option("basePath", s"$path/dfreq")
-            .parquet(s"$path/dfreq/batch=$lid").drop("batch"))
-          .repartition($"bucket")
-          .sortWithinPartitions($"bucket", $"term")
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/dfreq/.rebucket-live-tmp")
-    }
+    live.foreach(lid => rehash(Seq(lid), ".rebucket-live-tmp"))
     // COMMIT POINT: everything after the intent is replayable
     GI.writeMigrateIntent(fs, path, bm25RebucketMarker, plan,
       Some(newBuckets.toString))
@@ -983,17 +966,19 @@ object TextAnalysis {
   /** BM25 top-5 served from a [[saveBm25Index]] /
     * [[maintainBm25Index]] layout — identical output to the in-row
     * [[bm25]] on the same corpus and query batch (InvariantSpec pins
-    * it; both run [[bm25Tail]]). Per batch the index pays: one tiny
-    * job hashing the query terms to their buckets, a postings scan
-    * pruned to those PARTITIONS (bucket INSET in PartitionFilters)
-    * with the term INSET pushed for row-group stats inside them, a
-    * vocabulary scan pruned the same way plus a candidate-sized df
-    * rollup across batch generations, and a driver-side sum of the
-    * per-batch stats files — no corpus re-scan, no re-explode,
-    * whatever the index has grown to. `queries` must carry
-    * (query_id, term) and be serving-batch sized — enforced loudly via
-    * `maxQueryTerms` ([[requireServingBatch]]), since both sides of
-    * the score join broadcast the batch.
+    * it; both run [[bm25Tail]]). Per batch the index pays: one small
+    * metadata collect of the query terms with their buckets and
+    * the longest query's term count, a postings scan (schema declared,
+    * so no footer-inference job) pruned to those PARTITIONS (bucket
+    * INSET in PartitionFilters) with the term INSET pushed for
+    * row-group stats inside them, a candidate-sized df rollup of the
+    * same pruned rows across batch generations ([[bm25Df]] — the scan
+    * holds every posting of every query term; no df table is read),
+    * and a driver-side sum of the per-batch stats files — no corpus
+    * re-scan, no re-explode, whatever the index has grown to.
+    * `queries` must carry (query_id, term) and be serving-batch sized
+    * — enforced loudly via `maxQueryTerms` ([[requireServingBatch]]),
+    * since both sides of the score join broadcast the batch.
     *
     * Tuning (measured, `tools/bm25_prune_r16.json`): term-clustered
     * row groups prune the postings read ~4.8× at stock conf via page
@@ -1048,32 +1033,41 @@ object TextAnalysis {
       .map(p => graft.connect.Hfs.readSmall(fs, p).trim.split(" ").map(_.toLong))
     val n = stats.map(_(0)).sum
     val toks = stats.map(_(1)).sum
-    val q = queries.select($"query_id", $"term").distinct().persistScoped()
-    // driver-side prune lists: the batch is bounded by contract (and
-    // the guard below), so collecting its distinct terms/buckets is
-    // metadata-sized — and buys scan-level pruning no join could
-    val terms = q.select($"term").distinct().as[String].collect().toSeq
-    requireServingBatch(terms.size.toLong, maxQueryTerms, "bm25Serve")
+    // hashed on query_id once: the distinct and the per-query window
+    // below both run on that partitioning, with no exchange of their own
+    val q = queries.select($"query_id", $"term").repartition($"query_id")
+      .distinct().persistScoped()
+    // driver-side prune lists in ONE collect: per distinct term, its bucket
+    // and the term count of the longest query using it. The batch is
+    // bounded by contract, so the collect is metadata-sized — capped
+    // one row past the ceiling — and buys scan-level pruning no join
+    // could
+    val cap = math.min(maxQueryTerms, Int.MaxValue - 1L).toInt + 1
+    val meta = q
+      .withColumn("qn", count(lit(1)).over(Window.partitionBy($"query_id")))
+      .groupBy($"term").agg(max($"qn").as("qn"))
+      .select($"term", pmod(hash($"term"), lit(buckets)), $"qn")
+      .limit(cap).as[(String, Int, Long)].collect().toSeq
+    // a full cap means an oversized batch: only then count it exactly
+    // for the message
+    requireServingBatch(
+      if (meta.size < cap) meta.size.toLong
+      else q.select($"term").distinct().count(),
+      maxQueryTerms, "bm25Serve")
     // N is exact and driver-side here, so the fixed-point headroom
     // docstring is ENFORCED on the serve path, per query (the in-row
-    // path keeps N distributed; its corpora are pipeline-local).
-    // q is persisted + candidate-sized, so this 1-row agg is free.
-    val maxTermsPerQuery = q.groupBy($"query_id").agg(count(lit(1)).as("c"))
-      .agg(coalesce(max($"c"), lit(0L))).as[Long].head()
-    requireBm25Headroom(n, maxTermsPerQuery, "bm25Serve")
-    val bucketIds = q
-      .select(pmod(hash($"term"), lit(buckets)).as("b"))
-      .distinct().as[Int].collect().toSeq
-    val postings = s.read.parquet(s"$indexPath/postings")
-      .filter($"bucket".isin(bucketIds: _*) && $"term".isin(terms: _*))
-    // global df = exact sum of the per-batch counts (each doc lives in
-    // exactly one batch) — the scan prunes to the SAME bucket list as
-    // postings (shared hash(term) modulus), then rolls up the
-    // vocabulary-pruned rows only
-    val dfq = s.read.parquet(s"$indexPath/dfreq")
-      .filter($"bucket".isin(bucketIds: _*) && $"term".isin(terms: _*))
-      .groupBy($"term").agg(sum($"df").as("df"))
-    bm25Ranks(postings, dfq, q, lit(n), lit(toks), idfMode)
+    // path keeps N distributed; its corpora are pipeline-local)
+    requireBm25Headroom(n, (0L +: meta.map(_._3)).max, "bm25Serve")
+    // the pruned scan holds every posting of every query term across
+    // all generations, so df is its row count. Not persisted: the plan
+    // reads the frame twice, and adaptive execution would build the
+    // cache once per reference (two jobs, two full-width scans); the
+    // df side of a plain read scans the term column alone
+    val postings = readBm25Postings(s, indexPath,
+        graft.connect.GenerationalIndex.generations(fs, indexPath, "postings"))
+      .filter($"bucket".isin(meta.map(_._2).distinct: _*) &&
+        $"term".isin(meta.map(_._1): _*))
+    bm25Ranks(postings, bm25Df(postings), q, lit(n), lit(toks), idfMode)
   }
 
   /** The `q_text_bm25_serve` catalog row: [[bm25]]'s fixed query batch
@@ -1114,8 +1108,8 @@ object TextAnalysis {
     * [[compactBm25Index]] fold — against the same oracle SQL as
     * `q_text_bm25`. This runs the append ≡ rebuild invariant through
     * the DuckDB hash gate at every scale factor: df/N/token roll-
-    * forward, the per-batch layout, compaction's summed dfreq and
-    * stats, and serving across generations all sit on the hash path,
+    * forward, the per-batch layout, compaction's folded postings and
+    * summed stats, and serving across generations all sit on the hash path,
     * so a single bit of drift between the split build and the one-shot
     * scoring fails the row.
     */
@@ -1219,9 +1213,8 @@ object TextAnalysis {
       .join(broadcast(qterms), Seq("term"))
       .groupBy($"term", $"doc_id", $"len").agg(count(lit(1)).as("tf"))
       .persistScoped()
-    val dfreq = postings.groupBy($"term").agg(count(lit(1)).as("df"))
-    val lex = bm25Ranks(postings.crossJoin(broadcast(stats)), dfreq, queries,
-        $"n", $"toks")
+    val lex = bm25Ranks(postings.crossJoin(broadcast(stats)), bm25Df(postings),
+        queries, $"n", $"toks")
       .filter($"rank" <= 20)
       .select($"query_id", $"doc_id", $"rank".as("lex_rank"))
     // dense side: exact bridged cosine against every vector, top-20

@@ -50,8 +50,8 @@ class Bm25RebucketSpec extends SparkSpec {
     graft.CacheScope.drain()
     assert(bucketsOf(idx) == 16)
     assert(served(idx) == ref, "scores are layout-independent — they must not move")
-    // every postings and dfreq row sits in pmod(hash(term), 16)
-    for (sub <- Seq("postings", "dfreq")) {
+    // every postings row sits in pmod(hash(term), 16)
+    for (sub <- Seq("postings")) {
       val bad = spark.read.option("basePath", s"$idx/$sub").parquet(s"$idx/$sub")
         .filter(col("bucket") =!= pmod(hash($"term"), lit(16))).count()
       assert(bad == 0L, s"$sub holds $bad rows outside their new-modulus bucket")
@@ -60,6 +60,8 @@ class Bm25RebucketSpec extends SparkSpec {
       assert(gens == Seq("batch=-1", "batch=2"),
         s"$sub generations after rebucket: $gens")
     }
+    assert(!graft.connect.Hfs.fs(spark, idx).exists(
+      new org.apache.hadoop.fs.Path(idx, "dfreq")), "the layout has no dfreq/ sub")
     graft.CacheScope.drain()
   }
 
@@ -89,22 +91,19 @@ class Bm25RebucketSpec extends SparkSpec {
     // content), write the intent, STOP — then serve must replay it
     val b = populated("bm25-rebucket-crash-b", buckets = 5)
     val bfs = graft.connect.Hfs.fs(spark, b)
-    for (sub <- Seq("postings", "dfreq")) {
+    for (sub <- Seq("postings")) {
       spark.read.option("basePath", s"$a/$sub").parquet(s"$a/$sub/batch=-1")
         .drop("batch").repartition(col("bucket"))
-        .sortWithinPartitions(
-          (if (sub == "postings") Seq(col("bucket"), col("term"), col("doc_id"))
-           else Seq(col("bucket"), col("term"))): _*)
+        .sortWithinPartitions(col("bucket"), col("term"), col("doc_id"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$b/$sub/.compact-tmp")
       spark.read.option("basePath", s"$a/$sub").parquet(s"$a/$sub/batch=2")
         .drop("batch").repartition(col("bucket"))
-        .sortWithinPartitions(
-          (if (sub == "postings") Seq(col("bucket"), col("term"), col("doc_id"))
-           else Seq(col("bucket"), col("term"))): _*)
+        .sortWithinPartitions(col("bucket"), col("term"), col("doc_id"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$b/$sub/.rebucket-live-tmp")
     }
+    assert(!bfs.exists(new org.apache.hadoop.fs.Path(b, "dfreq")))
     graft.connect.Hfs.writeSmall(bfs,
       new org.apache.hadoop.fs.Path(b, "stats/.compact-tmp"),
       graft.connect.Hfs.readSmall(graft.connect.Hfs.fs(spark, a),

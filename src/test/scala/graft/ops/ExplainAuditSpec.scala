@@ -297,18 +297,28 @@ class ExplainAuditSpec extends SparkSpec {
     assert(plan.contains("WindowGroupLimit"), s"top-5 lost the group-limit pushdown:\n$plan")
   }
 
+  /** Fails unless the plan reads the index and EVERY index scan (a
+    * FileScan with a `bucket` column) carries the bucket INSET as a
+    * PartitionFilters entry and the pushed term INSET. */
+  private def assertIndexScansPruned(plan: String): Unit = {
+    val scans = plan.linesIterator
+      .filter("FileScan parquet \\[[^\\]]*\\bbucket#".r.findFirstIn(_).isDefined).toSeq
+    assert(scans.nonEmpty, s"no index scan in the plan:\n$plan")
+    scans.foreach { scan =>
+      assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(scan).isDefined,
+        s"index scan lost bucket partition pruning:\n$scan\n$plan")
+      assert(scan.contains("In(term"),
+        s"index scan lost the pushed term INSET:\n$scan\n$plan")
+    }
+  }
+
   test("q_text_hybrid_serve: lexical tower reads the pruned frozen index, fused top-k group-limited") {
     // the deployment-shaped hybrid must inherit the serve row's scan
-    // economics unchanged: bucket partition pruning on BOTH index
-    // scans (postings + bucketed dfreq, one shared hash(term) modulus)
-    // with the term INSET pushed, while the fusion tail plans its
+    // economics unchanged: bucket partition pruning on every index
+    // scan with the term INSET pushed, while the fusion tail plans its
     // per-query top-k as a group limit, not a global sort
     val plan = planOf("q_text_hybrid_serve")
-    val pruned = "PartitionFilters: \\[[^\\]]*bucket".r.findAllIn(plan).size
-    assert(pruned >= 2,
-      s"expected bucket partition pruning on postings AND dfreq scans, got $pruned:\n$plan")
-    assert(plan.contains("In(term"),
-      s"postings scan lost the pushed term INSET:\n$plan")
+    assertIndexScansPruned(plan)
     assert(plan.contains("WindowGroupLimit"),
       s"fused top-k lost the group-limit pushdown:\n$plan")
   }
@@ -318,14 +328,9 @@ class ExplainAuditSpec extends SparkSpec {
     // serving scan must still prune to the query's buckets at planning
     // time (across ALL generations) and push the term membership down
     val plan = planOf("q_text_bm25_incr")
-    // BOTH index scans — postings AND the bucketed dfreq — must carry
-    // the bucket INSET as a PartitionFilters entry (one shared
-    // hash(term) modulus, one driver-side prune list)
-    val pruned = "PartitionFilters: \\[[^\\]]*bucket".r.findAllIn(plan).size
-    assert(pruned >= 2,
-      s"expected bucket partition pruning on postings AND dfreq scans, got $pruned:\n$plan")
-    assert(plan.contains("In(term"),
-      s"postings scan lost the pushed term INSET:\n$plan")
+    // every index scan must carry the bucket INSET as a
+    // PartitionFilters entry (one driver-side prune list)
+    assertIndexScansPruned(plan)
     assert(plan.contains("WindowGroupLimit"), s"top-5 lost the group-limit pushdown:\n$plan")
   }
 

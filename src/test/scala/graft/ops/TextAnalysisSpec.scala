@@ -577,7 +577,8 @@ class TextAnalysisSpec extends SparkSpec {
     def batches(sub: String) = graft.connect.Hfs.listDirs(fs,
       new org.apache.hadoop.fs.Path(incr, sub)).map(_.getName).sorted
     assert(batches("postings") == Seq("batch=-1", "batch=2"))
-    assert(batches("dfreq") == Seq("batch=-1", "batch=2"))
+    // df is the postings row count: no per-batch df table is written
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(incr, "dfreq")))
     // a second compaction has a single foldable batch -> no-op
     assert(TextAnalysis.compactBm25Index(spark, incr) == 0)
     // the bucket modulus is part of the layout: a conflicting request
@@ -600,35 +601,7 @@ class TextAnalysisSpec extends SparkSpec {
     }
     TextAnalysis.maintainBm25Index(docs.filter("doc_id % 3 = 2"), crash, 2L)
     val cfs = graft.connect.Hfs.fs(spark, crash)
-    // stage: copy batch 0+1 consolidations into temps exactly as
-    // compactBm25Index would, then write the intent and STOP (the
-    // simulated crash before any delete/rename)
-    spark.read.option("basePath", s"$crash/postings")
-      .parquet(s"$crash/postings/batch=0", s"$crash/postings/batch=1")
-      .drop("batch")
-      .repartition(org.apache.spark.sql.functions.col("bucket"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$crash/postings/.compact-tmp")
-    spark.read.option("basePath", s"$crash/dfreq")
-      .parquet(s"$crash/dfreq/batch=0", s"$crash/dfreq/batch=1")
-      .groupBy("term", "bucket")
-      .agg(org.apache.spark.sql.functions.sum("df").as("df"))
-      .repartition(org.apache.spark.sql.functions.col("bucket"))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$crash/dfreq/.compact-tmp")
-    val s01 = Seq(0L, 1L).map { b =>
-      graft.connect.Hfs.readSmall(cfs,
-        new org.apache.hadoop.fs.Path(crash, s"stats/batch=$b"))
-        .trim.split(" ").map(_.toLong)
-    }
-    graft.connect.Hfs.writeSmall(cfs,
-      new org.apache.hadoop.fs.Path(crash, "stats/.compact-tmp"),
-      s"${s01.map(_(0)).sum} ${s01.map(_(1)).sum}", overwrite = true)
-    graft.connect.Hfs.writeSmall(cfs,
-      new org.apache.hadoop.fs.Path(crash, "_bm25_compact_intent"),
-      "-1 0,1", overwrite = true)
+    stageCrashedCompaction(crash, legacyDfreq = false)
     // serve entry replays the intent: same rows, sources folded
     assert(servedRows(crash) == ref, "intent replay double-counted")
     assert(!cfs.exists(new org.apache.hadoop.fs.Path(crash, "_bm25_compact_intent")))
@@ -636,6 +609,98 @@ class TextAnalysisSpec extends SparkSpec {
     val crashBatches = graft.connect.Hfs.listDirs(cfs,
       new org.apache.hadoop.fs.Path(crash, "postings")).map(_.getName).sorted
     assert(crashBatches == Seq("batch=-1", "batch=2"))
+  }
+
+  /** Stage a compaction of batches 0+1 of the three-batch index at
+    * `idx` by hand: copy their consolidations into temps exactly as
+    * compactBm25Index would, then write the intent and STOP (the
+    * simulated crash before any delete/rename). `legacyDfreq` first
+    * gives every batch the per-batch `dfreq/` sub earlier layouts wrote
+    * ((term, df) per bucket, df = the batch's postings rows per term)
+    * and stages its summed `.compact-tmp` as their compaction did. */
+  private def stageCrashedCompaction(idx: String, legacyDfreq: Boolean): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val fs = graft.connect.Hfs.fs(spark, idx)
+    spark.read.option("basePath", s"$idx/postings")
+      .parquet(s"$idx/postings/batch=0", s"$idx/postings/batch=1")
+      .drop("batch")
+      .repartition(col("bucket"))
+      .sortWithinPartitions("term", "doc_id")
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(s"$idx/postings/.compact-tmp")
+    if (legacyDfreq) {
+      (0 to 2).foreach { b =>
+        spark.read.parquet(s"$idx/postings/batch=$b")
+          .groupBy("term", "bucket").agg(count(lit(1)).as("df"))
+          .repartition(col("bucket"))
+          .sortWithinPartitions("bucket", "term")
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$idx/dfreq/batch=$b")
+      }
+      spark.read.option("basePath", s"$idx/dfreq")
+        .parquet(s"$idx/dfreq/batch=0", s"$idx/dfreq/batch=1")
+        .groupBy("term", "bucket").agg(sum("df").as("df"))
+        .repartition(col("bucket"))
+        .sortWithinPartitions("bucket", "term")
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$idx/dfreq/.compact-tmp")
+    }
+    val s01 = Seq(0L, 1L).map { b =>
+      graft.connect.Hfs.readSmall(fs,
+        new org.apache.hadoop.fs.Path(idx, s"stats/batch=$b"))
+        .trim.split(" ").map(_.toLong)
+    }
+    graft.connect.Hfs.writeSmall(fs,
+      new org.apache.hadoop.fs.Path(idx, "stats/.compact-tmp"),
+      s"${s01.map(_(0)).sum} ${s01.map(_(1)).sum}", overwrite = true)
+    graft.connect.Hfs.writeSmall(fs,
+      new org.apache.hadoop.fs.Path(idx, "_bm25_compact_intent"),
+      "-1 0,1", overwrite = true)
+  }
+
+  test("BM25 index with a legacy dfreq/ sub and a pending compaction: served as a fresh index, dfreq dropped by the next writer") {
+    val dir = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val queries = spark.read.parquet(s"$dir/documents.parquet")
+      .filter("doc_id % 97 = 3 AND doc_id < 100000")
+      .selectExpr("doc_id AS query_id",
+        "explode(slice(split(text, ' '), 1, 8)) AS term").distinct()
+    def servedRows(idx: String) = {
+      val out = TextAnalysis.bm25Serve(spark, queries, idx).collect().toSeq
+      graft.CacheScope.drain()
+      out
+    }
+    val fresh = tmpDir("bm25-legacy-ref").toString
+    TextAnalysis.saveBm25Index(docs, fresh)
+    val ref = servedRows(fresh)
+    assert(ref.nonEmpty)
+    def legacy(name: String): (String, org.apache.hadoop.fs.FileSystem) = {
+      val idx = tmpDir(name).toString
+      (0 to 2).foreach { r =>
+        TextAnalysis.maintainBm25Index(docs.filter(s"doc_id % 3 = $r"), idx, r.toLong)
+      }
+      stageCrashedCompaction(idx, legacyDfreq = true)
+      graft.CacheScope.drain()
+      (idx, graft.connect.Hfs.fs(spark, idx))
+    }
+    def has(fs: org.apache.hadoop.fs.FileSystem, idx: String, sub: String) =
+      fs.exists(new org.apache.hadoop.fs.Path(idx, sub))
+    // the serve replays the pending intent and ignores dfreq/
+    val (a, afs) = legacy("bm25-legacy-compact")
+    assert(servedRows(a) == ref, "legacy layout served different rows")
+    assert(!has(afs, a, "_bm25_compact_intent"))
+    assert(has(afs, a, "dfreq"), "a reader must not rewrite the index")
+    // the next writer verb deletes dfreq/, staged temp included
+    assert(TextAnalysis.compactBm25Index(spark, a) == 0)
+    assert(!has(afs, a, "dfreq"))
+    assert(servedRows(a) == ref, "dropping dfreq/ changed served rows")
+    // maintain is a writer verb too, with the intent still pending; an
+    // empty batch still writes nothing
+    val (b, bfs) = legacy("bm25-legacy-maintain")
+    TextAnalysis.maintainBm25Index(docs.limit(0), b, 7L)
+    assert(!has(bfs, b, "dfreq") && !has(bfs, b, "_bm25_compact_intent"))
+    assert(!has(bfs, b, "postings/batch=7") && !has(bfs, b, "stats/batch=7"))
+    assert(servedRows(b) == ref, "maintain over a legacy layout changed served rows")
   }
 
   test("bm25 serving-batch ceiling: oversized query vocabulary fails loudly, names the routes") {
