@@ -1021,13 +1021,8 @@ object Dedup {
     */
   private[graft] def dedupClustersRounds(s: SparkSession, dir: String, rounds: Int): DataFrame = {
     import s.implicits._
-    val bands = bandsDf(s, dir).persistScoped()
-    val pairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
+    val pairs = bandPairs(bandsDf(s, dir).persistScoped())
+      .toDF("d1", "d2")
       .persistScoped()
     val edges = pairs.unionByName(pairs.select($"d2".as("d1"), $"d1".as("d2")))
     var labels = Tables.t(s, dir, "documents").select($"doc_id", $"doc_id".as("label"))
@@ -1059,22 +1054,17 @@ object Dedup {
     * counter instead of a hardcoded round count, so chain-shaped
     * duplicate graphs (diameter ≫ 3) still resolve. Each round is the
     * same single (edge ⋈ label) shuffle as [[dedupClustersRounds]];
-    * `localCheckpoint` after every round truncates the lineage that
-    * would otherwise re-execute 2^rounds times AND makes the
-    * changed-label count a cheap scan of materialized partitions.
-    * Converges in ≤ diameter rounds (min labels only ever shrink);
-    * `maxRounds` is a runaway guard, not a semantic bound.
+    * the per-round lineage cut truncates the lineage that would
+    * otherwise re-execute 2^rounds times AND makes the changed-label
+    * count a cheap scan of materialized partitions. Converges in ≤
+    * diameter rounds (min labels only ever shrink). Rounds, cuts,
+    * `checkpointDir` and the `maxRounds` guard follow
+    * [[graft.ops.untilStable]].
     *
     * At 100 TB: per-round cost is one shuffle keyed by node id over the
-    * edge table. Pass `checkpointDir` for production fault tolerance:
-    * every `checkpointEvery` rounds the label table is RELIABLY
-    * checkpointed (written to the dir — typically HDFS/S3 — via
-    * `SparkContext.setCheckpointDir`), so an executor death replays at
-    * most `checkpointEvery` rounds instead of losing the
-    * executor-local blocks `localCheckpoint` keeps; the cheap local
-    * variant still truncates lineage on the rounds in between. The
-    * remaining documented upgrade is large-star/small-star for
-    * O(log diameter) rounds — same per-round plan shape.
+    * edge table. The remaining documented upgrade is
+    * large-star/small-star for O(log diameter) rounds — same per-round
+    * plan shape ([[connectedComponentsStar]]).
     *
     * Input: `nodes` = (id: long), `edges` = (src: long, dst: long),
     * undirected (symmetrized internally). Output: (id, label) with
@@ -1083,39 +1073,25 @@ object Dedup {
   def connectedComponents(
       s: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 50,
-      checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     import s.implicits._
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    // lineage cut per round: reliable on every checkpointEvery-th round
-    // when a dir is configured, executor-local otherwise
-    // lineageCut (not raw localCheckpoint): also resets the leaf's size
-    // estimate, or per-round join-size products compound exponentially
-    // in the stats BigInt (driver hang past ~20 rounds; PLANS.md r9)
-    def cut(df: DataFrame, round: Int): DataFrame =
-      lineageCut(df, checkpointDir.isDefined && round % checkpointEvery == 0)
     val sym = edges.select($"src", $"dst")
       .unionByName(edges.select($"dst".as("src"), $"src".as("dst")))
       .distinct()
       .localCheckpoint()
-    var labels = nodes.select($"id", $"id".as("label")).localCheckpoint()
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
-      round += 1
-      val nbrMin = sym
-        .join(labels.select($"id".as("nid"), $"label".as("nlabel")), $"dst" === $"nid")
-        .groupBy($"src").agg(min($"nlabel").as("nmin"))
-      val next = cut(labels
-        .join(nbrMin, labels("id") === nbrMin("src"), "left")
-        .select(labels("id"), labels("label").as("old_label"),
-          least(labels("label"), coalesce($"nmin", labels("label"))).as("label")),
-        round)
-      changed = next.filter($"label" < $"old_label").count()
-      labels = next.select($"id", $"label")
-    }
-    require(changed == 0, s"connectedComponents did not converge in $maxRounds rounds")
-    labels
+    val labels0 = nodes.select($"id", $"id".as("label")).localCheckpoint()
+    untilStable("connectedComponents", maxRounds, checkpointDir)(labels0) {
+      (labels, cut) =>
+        val nbrMin = sym
+          .join(labels.select($"id".as("nid"), $"label".as("nlabel")), $"dst" === $"nid")
+          .groupBy($"src").agg(min($"nlabel").as("nmin"))
+        val next = cut(labels
+          .join(nbrMin, labels("id") === nbrMin("src"), "left")
+          .select(labels("id"), labels("label").as("old_label"),
+            least(labels("label"), coalesce($"nmin", labels("label"))).as("label")))
+        val changed = next.filter($"label" < $"old_label").count()
+        (next.select($"id", $"label"), changed == 0, s"$changed labels still moving")
+    }._1
   }
 
   /** Alternating large-star/small-star connected components — the
@@ -1140,65 +1116,66 @@ object Dedup {
     * component min) and stops changing; checked by count equality +
     * one `exceptAll` over the checkpoint-materialized edge table.
     * Labels read straight off the final stars; isolated nodes label
-    * themselves. Same reliable-checkpoint contract as
-    * [[connectedComponents]].
+    * themselves. Returns the labels and the round count (the spec
+    * asserts the logarithmic bound instead of taking it on faith).
+    * Rounds, cuts, `checkpointDir` and the `maxRounds` guard follow
+    * [[graft.ops.untilStable]].
     */
   def connectedComponentsStar(
       s: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 30,
-      checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): DataFrame =
-    ccStarWithRounds(s, nodes, edges, maxRounds, checkpointDir, checkpointEvery)._1
-
-  /** [[connectedComponentsStar]] plus the round count, so the spec can
-    * assert the logarithmic bound instead of taking it on faith.
-    */
-  private[graft] def ccStarWithRounds(
-      s: SparkSession, nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int = 30,
-      checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): (DataFrame, Int) = {
+      checkpointDir: Option[String] = None): (DataFrame, Int) = {
     import s.implicits._
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    // lineageCut (not raw localCheckpoint): also resets the leaf's size
-    // estimate, or per-round join-size products compound exponentially
-    // in the stats BigInt (driver hang past ~20 rounds; PLANS.md r9)
-    def cut(df: DataFrame, round: Int): DataFrame =
-      lineageCut(df, checkpointDir.isDefined && round % checkpointEvery == 0)
-    var e = edges
+    val e0 = edges
       .select(greatest($"src", $"dst").as("hi"), least($"src", $"dst").as("lo"))
       .filter($"hi" =!= $"lo")
       .distinct()
       .localCheckpoint()
-    var n = e.count()
-    var round = 0
-    var stable = n == 0
-    while (!stable && round < maxRounds) {
-      round += 1
-      val sym = e.select($"hi".as("u"), $"lo".as("v"))
-        .unionByName(e.select($"lo".as("u"), $"hi".as("v")))
-      val lsMin = sym.groupBy($"u").agg(min($"v").as("mv"))
-        .select($"u", least($"u", $"mv").as("m"))
-      val ls = sym.join(lsMin, "u")
-        .filter($"v" > $"u")
-        .select($"v".as("hi"), $"m".as("lo"))
-        .distinct()
-      val ssRows = ls.join(ls.groupBy($"hi").agg(min($"lo").as("m")), "hi")
-      val next = cut(
-        ssRows.filter($"lo" =!= $"m").select($"lo".as("hi"), $"m".as("lo"))
-          .unionByName(ssRows.select($"hi", $"m".as("lo")))
-          .distinct(), round)
-      val nn = next.count()
-      stable = nn == n && next.exceptAll(e).isEmpty
-      e = next
-      n = nn
+    val n0 = e0.count()
+    val ((e, _), rounds) = untilStable(
+        "connectedComponentsStar", maxRounds, checkpointDir)((e0, n0), n0 == 0) {
+      case ((e, n), cut) =>
+        val sym = e.select($"hi".as("u"), $"lo".as("v"))
+          .unionByName(e.select($"lo".as("u"), $"hi".as("v")))
+        val lsMin = sym.groupBy($"u").agg(min($"v").as("mv"))
+          .select($"u", least($"u", $"mv").as("m"))
+        val ls = sym.join(lsMin, "u")
+          .filter($"v" > $"u")
+          .select($"v".as("hi"), $"m".as("lo"))
+          .distinct()
+        val ssRows = ls.join(ls.groupBy($"hi").agg(min($"lo").as("m")), "hi")
+        val next = cut(
+          ssRows.filter($"lo" =!= $"m").select($"lo".as("hi"), $"m".as("lo"))
+            .unionByName(ssRows.select($"hi", $"m".as("lo")))
+            .distinct())
+        val nn = next.count()
+        ((next, nn), nn == n && next.exceptAll(e).isEmpty, s"$nn star edges")
     }
-    require(stable, s"connectedComponentsStar did not converge in $maxRounds rounds")
     val labels = nodes
       .join(e.groupBy($"hi").agg(min($"lo").as("star_lo")),
         nodes("id") === $"hi", "left")
       .select(nodes("id"), coalesce($"star_lo", nodes("id")).as("label"))
-    (labels, round)
+    (labels, rounds)
+  }
+
+  /** Candidate pairs of a band table: the distinct (src < dst) doc
+    * pairs sharing at least one (band, key) bucket. */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bands.as("a")
+      .join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
+      .distinct()
+
+  /** (nodes, candidate-pair edges) of the LSH band graph — shared by
+    * both CC catalog rows.
+    */
+  private[ops] def lshPairGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val pairs = bandPairs(bandsDf(s, dir).persistScoped())
+    val nodes = Tables.t(s, dir, "documents").select($"doc_id".as("id"))
+    (nodes, pairs)
   }
 
   /** Catalog query for [[connectedComponents]]: exact components of the
@@ -1208,22 +1185,6 @@ object Dedup {
     * iterate-until-stable label propagation — so agreement checks the
     * SEMANTICS (true components), not a replayed plan.
     */
-  /** (nodes, candidate-pair edges) of the LSH band graph — shared by
-    * both CC catalog rows.
-    */
-  private[ops] def lshPairGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val bands = bandsDf(s, dir).persistScoped()
-    val pairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
-      .distinct()
-    val nodes = Tables.t(s, dir, "documents").select($"doc_id".as("id"))
-    (nodes, pairs)
-  }
-
   def ccClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (nodes, pairs) = lshPairGraph(s, dir)
@@ -1242,7 +1203,7 @@ object Dedup {
   def ccClustersStar(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (nodes, pairs) = lshPairGraph(s, dir)
-    connectedComponentsStar(s, nodes, pairs)
+    connectedComponentsStar(s, nodes, pairs)._1
       .select($"id".as("doc_id"), $"label")
       .orderBy($"doc_id")
   }
@@ -1266,13 +1227,20 @@ object Dedup {
       docs: DataFrame, keepBestByChars: Boolean = false): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val bands = bandsForDocs(docs.select($"doc_id", $"text")).persistScoped()
-    val pairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
-      .distinct()
+    val pairs = bandPairs(bandsForDocs(docs.select($"doc_id", $"text")).persistScoped())
+    keepOnePerFamily(docs, pairs, keepBestByChars)
+  }
+
+  /** The keep-one-per-family tail of [[nearDupFilterOn]] and
+    * [[exactDedupFilterOn]]: connected components over the candidate
+    * `pairs` (src, dst), then one surviving doc per component — the
+    * min-id canonical, or the longest text with `keepBestByChars` —
+    * applied to `docs` as a left-semi join (schema passes through).
+    */
+  private def keepOnePerFamily(docs: DataFrame, pairs: DataFrame,
+      keepBestByChars: Boolean): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
     val labels = connectedComponents(
       s, docs.select($"doc_id".as("id")), pairs)
     val kept =
@@ -1677,19 +1645,7 @@ object Dedup {
     import s.implicits._
     val pairs = prefixJoinPairsOn(docs.select($"doc_id", $"text"), tauMilli)
       .select($"doc_a".as("src"), $"doc_b".as("dst"))
-    val labels = connectedComponents(
-      s, docs.select($"doc_id".as("id")), pairs)
-    val kept =
-      if (!keepBestByChars)
-        labels.filter($"id" === $"label").select($"id".as("doc_id"))
-      else
-        labels
-          .join(docs.select($"doc_id",
-            length($"text").cast("long").as("__len")), $"id" === $"doc_id")
-          .groupBy($"label")
-          .agg(min(struct((-$"__len").as("neg"), $"doc_id".as("kid"))).as("best"))
-          .select($"best.kid".as("doc_id"))
-    docs.join(kept, Seq("doc_id"), "left_semi")
+    keepOnePerFamily(docs, pairs, keepBestByChars)
   }
 
   /** Exact CONTAINMENT decontamination — the asymmetric sibling of

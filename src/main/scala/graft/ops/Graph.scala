@@ -379,80 +379,39 @@ object Graph {
     * every round), but termination is data-driven — stop when the max
     * per-node rank move is ≤ `tolMicro` micro-units, an EXACT integer
     * test on the same bridge as the ranks themselves (no float epsilon
-    * whose evaluation could differ across engines). Lineage follows
-    * the [[Dedup.connectedComponents]] contract verbatim:
-    * `localCheckpoint` truncates every round (the plan would otherwise
-    * double per round), and with `checkpointDir` set every
-    * `checkpointEvery`-th round is RELIABLY checkpointed so an
-    * executor death replays at most `checkpointEvery` rounds on a
-    * 1000-executor run. `maxRounds` is the runaway guard — hitting it
-    * without convergence is an error, never a silent partial result.
+    * whose evaluation could differ across engines). Returns the ranks
+    * and the round count. Rounds, cuts, `checkpointDir` and the
+    * `maxRounds` guard follow [[graft.ops.untilStable]].
     */
   def pagerankConverged(nodes: DataFrame, pairs: DataFrame,
       tolMicro: Long = 1000L, maxRounds: Int = 50,
-      checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): DataFrame =
-    pagerankConvergedWithRounds(
-      nodes, pairs, tolMicro, maxRounds, checkpointDir, checkpointEvery)._1
-
-  /** [[pagerankConverged]] / [[kcoreConverged]] over the catalog's LSH
-    * pair graph, with round counts — the production (convergence-
-    * driven) entries bench harnesses measure on the hub fixtures
-    * (PLANS.md); the catalog rows stay the fixed-round differential
-    * gates. */
-  def pagerankConvergedOnLsh(s: SparkSession, dir: String,
-      tolMicro: Long = 1000L,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val (nodes, pairs) = Dedup.lshPairGraph(s, dir)
-    pagerankConvergedWithRounds(nodes, pairs, tolMicro, 50, checkpointDir, 5)
-  }
-
-  def kcoreConvergedOnLsh(s: SparkSession, dir: String,
-      k: Long = 3L,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val (_, pairs) = Dedup.lshPairGraph(s, dir)
-    kcoreConvergedWithRounds(pairs, k, 100, checkpointDir, 5)
-  }
-
-  private[ops] def pagerankConvergedWithRounds(
-      nodes: DataFrame, pairs: DataFrame, tolMicro: Long, maxRounds: Int,
-      checkpointDir: Option[String], checkpointEvery: Int): (DataFrame, Int) = {
     import nodes.sparkSession.implicits._
-    val sc = nodes.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    // lineageCut (not raw localCheckpoint): also resets the leaf's size
-    // estimate, or per-round join-size products compound exponentially
-    // in the stats BigInt (driver hang past ~20 rounds; PLANS.md r9)
-    def cut(df: DataFrame, round: Int): DataFrame =
-      lineageCut(df, checkpointDir.isDefined && round % checkpointEvery == 0)
     val edges = pairs.select($"src".as("u"), $"dst".as("v"))
       .unionAll(pairs.select($"dst".as("u"), $"src".as("v"))).localCheckpoint()
     val deg = edges.groupBy($"u".as("id")).agg(count(lit(1)).as("deg"))
     val base = nodes.join(deg, Seq("id"), "left")
       .select($"id", coalesce($"deg", lit(0L)).as("deg")).localCheckpoint()
-    var state = base.withColumn("rank", lit(1000000L)).localCheckpoint()
-    var round = 0
-    var delta = Long.MaxValue
-    while (delta > tolMicro && round < maxRounds) {
-      round += 1
-      val contrib = state.filter($"deg" > 0)
-        .select($"id".as("u"), expr("rank div deg").as("c"))
-      val incoming = edges.join(contrib, Seq("u"))
-        .groupBy($"v".as("id")).agg(sum($"c").as("s"))
-      val next = cut(base.join(incoming, Seq("id"), "left")
-        .join(state.select($"id", $"rank".as("prev_rank")), Seq("id"))
-        .select($"id", $"deg",
-          (lit(150000L) + expr("(850000 * coalesce(s, 0)) div 1000000")).as("rank"),
-          $"prev_rank"), round)
-      // exact integer max-move; the cut above materialized `next`, so
-      // this is a scan of local blocks, not a plan re-execution
-      delta = next.select(coalesce(max(abs($"rank" - $"prev_rank")), lit(0L)))
-        .head().getLong(0)
-      state = next.select($"id", $"deg", $"rank")
+    val state0 = base.withColumn("rank", lit(1000000L)).localCheckpoint()
+    val (state, rounds) = untilStable("pagerank", maxRounds, checkpointDir)(state0) {
+      (state, cut) =>
+        val contrib = state.filter($"deg" > 0)
+          .select($"id".as("u"), expr("rank div deg").as("c"))
+        val incoming = edges.join(contrib, Seq("u"))
+          .groupBy($"v".as("id")).agg(sum($"c").as("s"))
+        val next = cut(base.join(incoming, Seq("id"), "left")
+          .join(state.select($"id", $"rank".as("prev_rank")), Seq("id"))
+          .select($"id", $"deg",
+            (lit(150000L) + expr("(850000 * coalesce(s, 0)) div 1000000")).as("rank"),
+            $"prev_rank"))
+        // exact integer max-move; the cut above materialized `next`, so
+        // this is a scan of local blocks, not a plan re-execution
+        val delta = next.select(coalesce(max(abs($"rank" - $"prev_rank")), lit(0L)))
+          .head().getLong(0)
+        (next.select($"id", $"deg", $"rank"), delta <= tolMicro,
+          s"last max move $delta µ")
     }
-    require(delta <= tolMicro,
-      s"pagerank did not converge in $maxRounds rounds (last max move $delta µ)")
-    (state.select($"id".as("doc_id"), $"rank").orderBy($"doc_id"), round)
+    (state.select($"id".as("doc_id"), $"rank").orderBy($"doc_id"), rounds)
   }
 
   /** Oracle: the same three integer-bridge iterations as an unrolled
@@ -720,50 +679,29 @@ object Graph {
     * instead of [[kcoreOf]]'s fixed unroll. A pendant chain deeper
     * than the fixed round count is exactly the case this exists for:
     * the fixed variant leaves the chain's tail in the "core", the
-    * converged one peels to the true fixpoint. Reliable-checkpoint
-    * cadence matches [[Dedup.connectedComponents]]: `checkpointDir` +
-    * `checkpointEvery` bound executor-death replay on long peels;
-    * `maxRounds` is the runaway guard (error, never partial output).
+    * converged one peels to the true fixpoint. Returns the core
+    * degrees and the round count. Rounds, cuts, `checkpointDir` and
+    * the `maxRounds` guard follow [[graft.ops.untilStable]].
     */
   def kcoreConverged(pairs: DataFrame, k: Long, maxRounds: Int = 100,
-      checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): DataFrame =
-    kcoreConvergedWithRounds(pairs, k, maxRounds, checkpointDir, checkpointEvery)._1
-
-  private[ops] def kcoreConvergedWithRounds(
-      pairs: DataFrame, k: Long, maxRounds: Int,
-      checkpointDir: Option[String], checkpointEvery: Int): (DataFrame, Int) = {
+      checkpointDir: Option[String] = None): (DataFrame, Int) = {
     import pairs.sparkSession.implicits._
-    val sc = pairs.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    // lineageCut (not raw localCheckpoint): also resets the leaf's size
-    // estimate, or per-round join-size products compound exponentially
-    // in the stats BigInt (driver hang past ~20 rounds; PLANS.md r9)
-    def cut(df: DataFrame, round: Int): DataFrame =
-      lineageCut(df, checkpointDir.isDefined && round % checkpointEvery == 0)
     def degrees(e: DataFrame): DataFrame =
       e.select($"src".as("id")).union(e.select($"dst".as("id")))
         .groupBy($"id").agg(count(lit(1)).as("d"))
-    var e = pairs.select($"src", $"dst").localCheckpoint(true)
-    var nEdges = e.count()
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      round += 1
+    val e0 = pairs.select($"src", $"dst").localCheckpoint(true)
+    val ((e, _), rounds) = untilStable("k-core", maxRounds, checkpointDir)(
+        (e0, e0.count())) { case ((e, nEdges), cut) =>
       val keep = degrees(e).filter($"d" >= k).select($"id")
       val next = cut(e
         .join(keep.withColumnRenamed("id", "src"), Seq("src"))
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"))
-        .select($"src", $"dst"), round)
+        .select($"src", $"dst"))
       val m = next.count()
-      changed = m != nEdges
-      nEdges = m
-      e = next
+      ((next, m), m == nEdges, s"$m edges left")
     }
-    require(!changed,
-      s"k-core did not reach a fixpoint in $maxRounds rounds ($nEdges edges left)")
     (degrees(e).select($"id".as("doc_id"), $"d".as("core_degree"))
-      .orderBy($"doc_id"), round)
+      .orderBy($"doc_id"), rounds)
   }
 
   private val kcoreSql = {
@@ -864,49 +802,24 @@ object Graph {
     * the SMALLER of its two cycling labels (`least(lbl, prev)`) — the
     * same min-label symmetry-break as the gate row's tie-break — and
     * the run terminates with that labeling. `maxRounds` stays the
-    * runaway guard for non-period-2 non-convergence: hitting it is an
-    * error, never a silent partial result.
+    * runaway guard for non-period-2 non-convergence.
     *
-    * Lineage follows the [[pagerankConvergedWithRounds]] contract:
-    * `lineageCut` truncates every round (plan + stats growth), and
-    * with `checkpointDir` set every `checkpointEvery`-th round is
-    * reliably checkpointed so an executor death on a 1000-executor
-    * run replays at most `checkpointEvery` rounds.
+    * Returns the community rollup and the round count. Rounds, cuts,
+    * `checkpointDir` and the `maxRounds` guard follow
+    * [[graft.ops.untilStable]].
     */
   def lpaConverged(nodes: DataFrame, pairs: DataFrame,
       maxRounds: Int = 50,
-      checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): DataFrame =
-    lpaConvergedWithRounds(nodes, pairs, maxRounds, checkpointDir, checkpointEvery)._1
-
-  /** [[lpaConverged]] over the catalog's LSH pair graph, with the
-    * round count — the entry bench harnesses measure on the hub
-    * fixtures; the catalog row stays the fixed-round differential
-    * gate. */
-  def lpaConvergedOnLsh(s: SparkSession, dir: String,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val (nodes, pairs) = Dedup.lshPairGraph(s, dir)
-    lpaConvergedWithRounds(nodes, pairs, 50, checkpointDir, 5)
-  }
-
-  private[ops] def lpaConvergedWithRounds(
-      nodes: DataFrame, pairs: DataFrame, maxRounds: Int,
-      checkpointDir: Option[String], checkpointEvery: Int): (DataFrame, Int) = {
     import nodes.sparkSession.implicits._
-    val sc = nodes.sparkSession.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def cut(df: DataFrame, round: Int): DataFrame =
-      lineageCut(df, checkpointDir.isDefined && round % checkpointEvery == 0)
     val edges = pairs.select($"src".as("u"), $"dst".as("v"))
       .unionAll(pairs.select($"dst".as("u"), $"src".as("v"))).localCheckpoint()
     // state carries (lbl, prev): the label now and one round ago —
     // exactly the history the 2-cycle test needs
-    var state = nodes.select($"id", $"id".as("lbl"), $"id".as("prev"))
+    val state0 = nodes.select($"id", $"id".as("lbl"), $"id".as("prev"))
       .localCheckpoint()
-    var round = 0
-    var changed = Long.MaxValue
-    while (changed > 0 && round < maxRounds) {
-      round += 1
+    val (state, rounds) = untilStable("label propagation", maxRounds, checkpointDir)(
+        state0) { (state, cut) =>
       val neigh = edges.join(state.select($"id".as("u"), $"lbl"), Seq("u"))
         .groupBy($"v", $"lbl").agg(count(lit(1)).as("cnt"))
       val winner = neigh
@@ -917,26 +830,22 @@ object Graph {
         .select($"id",
           coalesce($"new_lbl", $"lbl").as("lbl"),
           $"lbl".as("prev"),
-          $"prev".as("prev2")), round)
+          $"prev".as("prev2")))
       // both counts scan the just-materialized leaf — no re-execution
-      changed = next.filter($"lbl" =!= $"prev").count()
-      if (changed > 0) {
-        val offCycle = next.filter($"lbl" =!= $"prev2").count()
-        if (offCycle == 0) {
-          // pure period-2 oscillation: resolve by min-label and stop —
-          // the resolved labeling is the cycle's deterministic fixed
-          // choice, and (min of the two) matches the gate tie-break
-          state = cut(next.select($"id",
-            least($"lbl", $"prev").as("lbl"), $"lbl".as("prev")), round)
-          changed = 0
-        } else state = next.select($"id", $"lbl", $"prev")
-      } else state = next.select($"id", $"lbl", $"prev")
+      val changed = next.filter($"lbl" =!= $"prev").count()
+      if (changed > 0 && next.filter($"lbl" =!= $"prev2").count() == 0)
+        // pure period-2 oscillation: resolve by min-label and stop —
+        // the resolved labeling is the cycle's deterministic fixed
+        // choice, and (min of the two) matches the gate tie-break
+        (cut(next.select($"id", least($"lbl", $"prev").as("lbl"), $"lbl".as("prev"))),
+          true, "")
+      else
+        (next.select($"id", $"lbl", $"prev"), changed == 0,
+          s"$changed nodes still moving")
     }
-    require(changed == 0,
-      s"label propagation did not converge in $maxRounds rounds ($changed nodes still moving)")
     (state.groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("n_nodes"), min($"id").as("min_doc"))
-      .orderBy($"community"), round)
+      .orderBy($"community"), rounds)
   }
 
   private val lpaSql = {

@@ -2801,7 +2801,6 @@ object Similarity {
     import graft.CacheScope._
     require(k >= 1 && k <= 16, s"k components must be in [1,16]: $k")
     var frame = embeddings.select($"vec_id", $"embedding")
-    var prevFrame: Option[DataFrame] = None
     val comps = Seq.newBuilder[(Long, Long, Long)]
     for (c <- 1 to k) {
       val (cx, v) = pcaCore(s, frame, rounds)
@@ -2829,14 +2828,9 @@ object Similarity {
         // lineage (hit in the r12 truncation study) — the cut
         // materializes the frame AND truncates the plan, so per-round
         // driver work stays constant like the converge loops'
-        val cut = lineageCut(defl, reliable = false)
-        cx.unpersist()
-        prevFrame.foreach(_.unpersist())
-        prevFrame = Some(cut)
-        frame = cut
-      } else {
-        cx.unpersist()
+        frame = lineageCut(defl, reliable = false)
       }
+      cx.unpersist()
     }
     comps.result().toDF("component", "dim", "v").orderBy($"component", $"dim")
   }

@@ -2835,12 +2835,12 @@ object TextAnalysis {
     * Cost: a 30k-merge budget at B=8 is ~3.7k driver round-trips
     * instead of 30k (PLANS.md, "Batched BPE merges", records the
     * design and its B=1 vs B=8 pins) — and each pass is still one
-    * vocabulary-sized job, never corpus-sized. Every `checkpointEvery`
+    * vocabulary-sized job, never corpus-sized. Every [[bpeCheckpointEvery]]
     * passes the cached vocab is locally checkpointed, truncating the
     * chained-replace lineage (bounded plan depth at production budgets).
     */
   private[graft] def bpeTrainBatchedOn(s: SparkSession, docs: DataFrame,
-      rounds: Int, batch: Int, checkpointEvery: Int = bpeCheckpointEvery)
+      rounds: Int, batch: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
     import s.implicits._
     require(batch >= 1, s"batch must be >= 1: $batch")
@@ -2919,7 +2919,7 @@ object TextAnalysis {
         // truncate the chained-replace lineage periodically: at a
         // production merge budget the logical plan would otherwise
         // nest one projection per pass
-        if (pass % checkpointEvery == 0) vocab = vocab.localCheckpoint()
+        if (pass % bpeCheckpointEvery == 0) vocab = vocab.localCheckpoint()
       }
     }
     (merges.result(), vocab)

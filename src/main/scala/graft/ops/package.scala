@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared helpers for the operator catalog.
@@ -69,9 +69,51 @@ package object ops {
     * hint small hot frames explicitly (`broadcast(...)`) instead of
     * relying on the estimate this rebuild deliberately drops.
     */
-  def lineageCut(df: org.apache.spark.sql.DataFrame,
-      reliable: Boolean): org.apache.spark.sql.DataFrame = {
+  def lineageCut(df: DataFrame, reliable: Boolean): DataFrame = {
     val ck = if (reliable) df.checkpoint() else df.localCheckpoint()
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  }
+
+  /** Rounds between reliable checkpoints in [[untilStable]]. */
+  private val reliableEvery = 5
+
+  /** The one iterate-until-stable driver behind the converge loops
+    * (connected components, star contraction, PageRank, k-core, LPA).
+    * Runs `step` from `init` until it reports a stable state and
+    * returns that state with the number of rounds it took.
+    *
+    * Each round, `step` gets the current state and that round's
+    * [[lineageCut]], and returns (next state, stable?, detail for the
+    * error message). Every cut truncates the plan (and its size
+    * estimate); the loop would otherwise re-execute and re-plan its
+    * whole history every round. With `checkpointDir` set, every 5th
+    * round's cut (`reliableEvery`) is a RELIABLE checkpoint (written to
+    * the dir — typically HDFS/S3 — via `SparkContext.setCheckpointDir`),
+    * so an executor death replays at most 5 rounds instead of losing
+    * the executor-local blocks `localCheckpoint` keeps; the rounds in
+    * between cut locally. `maxRounds` is a runaway guard, not
+    * a semantic bound: hitting it without a stable state is an error,
+    * never a silent partial result. `stable = true` returns `init`
+    * after zero rounds.
+    */
+  private[ops] def untilStable[S](what: String, maxRounds: Int,
+      checkpointDir: Option[String])(init: S, stable: Boolean = false)(
+      step: (S, DataFrame => DataFrame) => (S, Boolean, String)): (S, Int) = {
+    checkpointDir.foreach(SparkSession.active.sparkContext.setCheckpointDir)
+    var state = init
+    var done = stable
+    var detail = ""
+    var round = 0
+    while (!done && round < maxRounds) {
+      round += 1
+      val reliable = checkpointDir.isDefined && round % reliableEvery == 0
+      val (next, ok, why) = step(state, lineageCut(_, reliable))
+      state = next
+      done = ok
+      detail = why
+    }
+    require(done,
+      s"$what did not converge to a fixpoint in $maxRounds rounds ($detail)")
+    (state, round)
   }
 }

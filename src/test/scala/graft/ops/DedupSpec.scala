@@ -114,21 +114,27 @@ class DedupSpec extends SparkSpec {
     val clique = Dedup.connectedComponents(spark, Seq(10L, 11L, 12L).toDF("id"), cliqueEdges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clique.values.toSet == Set(10L))
+    // and a too-small maxRounds is an ERROR, not a partial labeling
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(spark, nodes, edges, maxRounds = 3)
+    }
+    assert(e.getMessage.contains("did not converge"))
   }
 
   test("connectedComponents with a reliable checkpoint dir: 20-link chain resolves, checkpoints written") {
     import spark.implicits._
-    // a 21-node chain needs 20 propagation rounds — with
-    // checkpointEvery=4 the label table must be RELIABLY checkpointed
-    // several times mid-run; results must be identical to the
-    // local-only path and the dir must actually contain checkpoint data
-    // (proving df.checkpoint() engaged, not the local fallback)
+    // a 21-node chain needs 20 propagation rounds — with a reliable
+    // checkpoint every 5th round (rounds 5/10/15/20) the label table
+    // must be RELIABLY checkpointed several times mid-run; results must
+    // be identical to the local-only path and the dir must actually
+    // contain checkpoint data (proving df.checkpoint() engaged, not the
+    // local fallback)
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toFile
     try {
       val nodes = (1L to 21L).toDF("id")
       val edges = (1L until 21L).map(i => (i, i + 1)).toDF("src", "dst")
       val labels = Dedup.connectedComponents(spark, nodes, edges,
-        checkpointDir = Some(dir.getAbsolutePath), checkpointEvery = 4)
+        checkpointDir = Some(dir.getAbsolutePath))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((1L to 21L).forall(labels(_) == 1L), s"chain not fully resolved: $labels")
       def files(f: java.io.File): Seq[java.io.File] = {
@@ -152,10 +158,15 @@ class DedupSpec extends SparkSpec {
     // loudly if the contraction ever degrades to linear.
     val nodes = (1L to 65L).toDF("id")
     val edges = (1L until 65L).map(i => (i, i + 1)).toDF("src", "dst")
-    val (labelsDf, rounds) = Dedup.ccStarWithRounds(spark, nodes, edges)
+    val (labelsDf, rounds) = Dedup.connectedComponentsStar(spark, nodes, edges)
     val labels = labelsDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 65L).forall(labels(_) == 1L), s"chain not fully resolved: $labels")
     assert(rounds <= 12, s"star contraction took $rounds rounds — not logarithmic")
+    // and a too-small maxRounds is an ERROR, not a partial labeling
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponentsStar(spark, nodes, edges, maxRounds = 2)
+    }
+    assert(e.getMessage.contains("did not converge"))
   }
 
   test("star CC agrees with label-propagation CC on a mixed multi-component graph") {
@@ -169,10 +180,34 @@ class DedupSpec extends SparkSpec {
       ).toDF("src", "dst")
     val simple = Dedup.connectedComponents(spark, nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.ccStarWithRounds(spark, nodes, edges)._1
+    val star = Dedup.connectedComponentsStar(spark, nodes, edges)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star == simple, s"star=$star\nsimple=$simple")
     assert(star(25L) == 3L && star(14L) == 10L && star(28L) == 5L && star(1L) == 1L)
+  }
+
+  test("nearDupFilterOn keeps one doc per family within the pinned stage count") {
+    import spark.implicits._
+    // two exact-copy families ({1,2,3}, {4,5}) and two singletons: the
+    // band join links each family, CC resolves it in one changing
+    // round plus the no-change round that proves the fixpoint
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy dog"),
+      (3L, "the quick brown fox jumps over the lazy dog"),
+      (4L, "a stitch in time saves nine they always said"),
+      (5L, "a stitch in time saves nine they always said"),
+      (6L, "colorless green ideas sleep furiously every night"),
+      (7L, "pack my box with five dozen liquor jugs today")).toDF("doc_id", "text")
+    val (kept, m) = graft.exec.SparkMetrics.measure(spark) {
+      Dedup.nearDupFilterOn(docs).select($"doc_id").as[Long].collect().toSet
+    }
+    graft.CacheScope.drain()
+    assert(kept == Set(1L, 4L, 6L, 7L))
+    // 29 = the stages this frame ran in when the pin was set (4 local
+    // cores): more means a CC round or the keep tail grew a job or an
+    // exchange
+    assert(m.stages <= 29, s"nearDupFilterOn ran ${m.stages} stages")
   }
 
   test("pigeonhole blocks: every 16-bit pair at hamming <= 4 shares a block") {

@@ -126,7 +126,7 @@ class GraphSpec extends SparkSpec {
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L).toDF("id")
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L)).toDF("src", "dst")
-    val (df, rounds) = Graph.lpaConvergedWithRounds(nodes, edges, 50, None, 5)
+    val (df, rounds) = Graph.lpaConverged(nodes, edges, 50, None)
     val r = df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
     assert(r == Set((1L, 3L, 1L), (3L, 3L, 4L), (7L, 1L, 7L)))
     assert(rounds == 4, s"expected stop at round 4, got $rounds")
@@ -138,7 +138,7 @@ class GraphSpec extends SparkSpec {
     // resolves both nodes to min(lbl, prev) = 1 — one community of 2
     val nodes = Seq(1L, 2L).toDF("id")
     val edges = Seq((1L, 2L)).toDF("src", "dst")
-    val (df, rounds) = Graph.lpaConvergedWithRounds(nodes, edges, 50, None, 5)
+    val (df, rounds) = Graph.lpaConverged(nodes, edges, 50, None)
     val r = df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
     assert(r == Set((1L, 2L, 1L)))
     assert(rounds <= 3, s"2-cycle should resolve within 3 rounds, took $rounds")
@@ -149,7 +149,7 @@ class GraphSpec extends SparkSpec {
     // (2,1,2,1) — period 2; resolution least(lbl, prev) = all 1s
     val nodes = Seq(1L, 2L, 3L, 4L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
-    val (df, rounds) = Graph.lpaConvergedWithRounds(nodes, edges, 50, None, 5)
+    val (df, rounds) = Graph.lpaConverged(nodes, edges, 50, None)
     val r = df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
     assert(r == Set((1L, 4L, 1L)))
     assert(rounds <= 4, s"square 2-cycle should resolve within 4 rounds, took $rounds")
@@ -179,9 +179,9 @@ class GraphSpec extends SparkSpec {
     // of burning maxRounds — and agree with the fixed-round gate math
     val nodes = Seq(1L, 2L, 3L, 10L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
-    val (df, rounds) = Graph.pagerankConvergedWithRounds(
+    val (df, rounds) = Graph.pagerankConverged(
       nodes, edges, tolMicro = 0L, maxRounds = 50,
-      checkpointDir = None, checkpointEvery = 5)
+      checkpointDir = None)
     val r = df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r == Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L, 10L -> 150000L))
     assert(rounds <= 2, s"fixpoint graph should converge in <=2 rounds, took $rounds")
@@ -194,9 +194,9 @@ class GraphSpec extends SparkSpec {
     // production callers trade tol for rounds on the same curve.
     val nodes = Seq(1L, 2L, 3L).toDF("id")
     val edges = Seq((1L, 2L), (1L, 3L)).toDF("src", "dst")
-    val (df, rounds) = Graph.pagerankConvergedWithRounds(
+    val (df, rounds) = Graph.pagerankConverged(
       nodes, edges, tolMicro = 50000L, maxRounds = 50,
-      checkpointDir = None, checkpointEvery = 5)
+      checkpointDir = None)
     assert(rounds < 50)
     val r = df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     val hub = r(1L)
@@ -222,8 +222,8 @@ class GraphSpec extends SparkSpec {
     val g = (Seq((1L, 2L), (1L, 3L), (2L, 3L)) ++ chain).toDF("src", "dst")
     val fixed4 = Graph.kcoreOf(g, 2, 4).collect().map(_.getLong(0)).toSet
     assert(fixed4.exists(_ >= 10L), "fixed 4 rounds should NOT have finished this peel")
-    val (df, rounds) = Graph.kcoreConvergedWithRounds(
-      g, 2, maxRounds = 100, checkpointDir = None, checkpointEvery = 5)
+    val (df, rounds) = Graph.kcoreConverged(
+      g, 2, maxRounds = 100, checkpointDir = None)
     val core = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
     // 6 peel rounds + the no-change round that proves the fixpoint
