@@ -11,14 +11,19 @@ import org.apache.spark.sql.Dataset
   * cached blocks until executor storage evicts under pressure.
   *
   * Contract: operators persist through [[CacheScope.persistScoped]];
-  * whoever owns the terminal action calls [[CacheScope.drain]] after
-  * it. The in-tree harness drains between queries ([[Verify]],
-  * [[Bench]], and the spec base already `clearCache()` there — drain
-  * keeps the registry itself from growing); a library user embedding
-  * the catalog drains at their own batch boundary. Unpersist is
-  * non-blocking, and dropping a cache entry is always correctness-safe
-  * in Spark (the plan recomputes), so a missed drain degrades to the
-  * pre-registry behavior, never to a wrong result.
+  * whoever owns the terminal action releases them after it. The engine
+  * owns two such boundaries, each a [[scoped]] block: a batch run
+  * (`exec.PipelineRunner.run`, whose loads are its terminal actions)
+  * and a streaming tick (the one `foreachBatch` of
+  * `streaming.StreamingLoad`). Outside them registrations go to the
+  * global registry and wait for [[CacheScope.drain]]: the in-tree
+  * harness drains between queries ([[Verify]], [[Bench]]), and a
+  * library user embedding the catalog drains at their own batch
+  * boundary. A persisted frame left registered keeps serving its
+  * blocks to any later plan that matches it, including a re-read of a
+  * source that has since gained files. Unpersist is non-blocking, and
+  * dropping a cache entry is always correctness-safe in Spark (the
+  * plan recomputes).
   */
 object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()

@@ -17,14 +17,22 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 object Sources {
   val fileFormats: Set[String] = Set("parquet", "csv", "json", "orc")
 
+  /** The one path rule for every load, extract and path option: an
+    * absolute path or a URI is used as given; any other path lives
+    * under the connection's `basePath` (or `baseDir`) when it has one. */
+  def resolve(conn: ConnectionSpec, path: String): String =
+    if (path.startsWith("/") || path.contains("://")) path
+    else conn.options.get("basePath").orElse(conn.options.get("baseDir"))
+      .fold(path)(b => s"$b/$path")
+
   def read(spark: SparkSession, conn: ConnectionSpec, step: ExtractStep): DataFrame =
     conn.format match {
       case f if fileFormats(f) =>
-        val path = step.path.orElse(step.table).getOrElse(
-          throw new IllegalArgumentException(s"extract '${step.name}': path required"))
-        val base = conn.options.get("basePath").orElse(conn.options.get("baseDir"))
-        val full = base.map(b => s"$b/$path").getOrElse(path)
-        val merged = conn.options ++ step.options
+        val full = resolve(conn, step.path.orElse(step.table).getOrElse(
+          throw new IllegalArgumentException(s"extract '${step.name}': path required")))
+        // the base is this engine's path rule, not Spark's partition
+        // base: an absolute path outside it must still read
+        val merged = conn.options ++ step.options - "basePath" - "baseDir"
         if (merged.get("streaming").contains("true")) {
           // Streaming file extract: the landing-zone shape — each
           // scheduled run drains the files that arrived since the last
@@ -32,8 +40,7 @@ object Sources {
           // a run is an incremental batch, not a rescan). File streams
           // need an explicit schema: pass DDL via option "schema", or
           // we infer once from the files already present.
-          val opts = admissionDefaults(
-            merged - "streaming" - "schema" - "basePath" - "baseDir")
+          val opts = admissionDefaults(merged - "streaming" - "schema")
           val schema = merged.get("schema")
             .map(org.apache.spark.sql.types.StructType.fromDDL)
             .getOrElse {
@@ -43,21 +50,12 @@ object Sources {
               read(spark, conn.copy(options = conn.options - "streaming"),
                 step.copy(options = step.options - "streaming")).schema
             }
-          val r = spark.readStream.options(opts).schema(schema)
-          f match {
-            case "csv" => r.option("header", "true").csv(full)
-            case "json" => r.json(full)
-            case "orc" => r.orc(full)
-            case _ => r.parquet(full)
-          }
+          val r = spark.readStream.options(opts).schema(schema).format(f)
+          (if (f == "csv") r.option("header", "true") else r).load(full)
         } else {
-          val r = spark.read.options(merged)
-          f match {
-            case "csv" => r.option("header", "true").option("inferSchema", "true").csv(full)
-            case "json" => r.json(full)
-            case "orc" => r.orc(full)
-            case _ => r.parquet(full)
-          }
+          val r = spark.read.options(merged).format(f)
+          (if (f == "csv") r.option("header", "true").option("inferSchema", "true") else r)
+            .load(full)
         }
       case "jdbc" =>
         // ≅ A1: the reference requires a non-empty query
@@ -114,10 +112,8 @@ object Sources {
   def write(df: DataFrame, conn: ConnectionSpec, step: LoadStep): Unit =
     conn.format match {
       case f if fileFormats(f) =>
-        val path = step.path.orElse(step.table).getOrElse(
-          throw new IllegalArgumentException(s"load '${step.name}': path required"))
-        val base = conn.options.get("basePath").orElse(conn.options.get("baseDir"))
-        val full = base.map(b => s"$b/$path").getOrElse(path)
+        val full = resolve(conn, step.path.orElse(step.table).getOrElse(
+          throw new IllegalArgumentException(s"load '${step.name}': path required")))
         // "annIndex": maintain an ANN serving index as a declarative
         // load step — the in-flight frame (vec_id, embedding) is
         // encoded with the frozen artifacts and written/appended as
@@ -276,14 +272,9 @@ object Sources {
             val partCols = step.options.get("partitionBy").toSeq
               .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
             val w0 = df.write.mode(saveMode(step.mode))
-              .options(step.options - "partitionBy")
+              .options(step.options - "partitionBy").format(f)
             val w = if (partCols.nonEmpty) w0.partitionBy(partCols: _*) else w0
-            f match {
-              case "csv" => w.option("header", "true").csv(full)
-              case "json" => w.json(full)
-              case "orc" => w.orc(full)
-              case _ => w.parquet(full)
-            }
+            (if (f == "csv") w.option("header", "true") else w).save(full)
         }
       case "jdbc" =>
         val table = step.table.getOrElse(throw new IllegalArgumentException(

@@ -1,5 +1,7 @@
 package graft.exec
 
+import graft.CacheScope
+import graft.CacheScope.Scoped
 import graft.connect.Sources
 import graft.model._
 import graft.store.{HistoryEvent, Repository}
@@ -70,10 +72,14 @@ final class PipelineRunner(
     run(repo.getPipeline(id).getOrElse(
       throw new IllegalArgumentException(s"unknown pipeline '$id'")))
 
+  /** One run is one [[CacheScope]]: the loads inside it are the
+    * run's terminal actions, so whatever its steps persisted is
+    * released when it ends — a later run re-reads its sources instead
+    * of serving the blocks this run cached. */
   def run(p: PipelineSpec): RunResult = {
     val started = Instant.now()
     repo.appendHistory(HistoryEvent(p.id, started, None, "running", "started"))
-    try {
+    try CacheScope.scoped {
       val ordered = p.steps.sortBy(_.order) // ≅ core/engine.py:49
       // per connection: how many loads would share its connection-level
       // checkpoint — feeds StreamingLoad's sole-load legacy adoption
@@ -131,7 +137,7 @@ final class PipelineRunner(
             Some(registry(t.transformName.getOrElse(
               throw new IllegalArgumentException(
                 s"transform '${t.name}': transformName required")))(df))
-          case "cache" => Some(df.cache())
+          case "cache" => Some(df.persistScoped())
           case other => // ≅ unknown-transform guard, core/engine.py:160-162
             throw new IllegalArgumentException(s"unknown transform kind '$other'")
         }

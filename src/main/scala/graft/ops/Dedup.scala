@@ -1569,9 +1569,10 @@ object Dedup {
     // formulations: re-collecting what explode tore apart cost a full
     // corpus-token exchange, and semi-join-pruning that aggregate to
     // candidate ids cost MORE than it saved at every scale (pair-set
-    // materialization + extra exchanges; ExactJoinProbe, 1×/100×,
-    // gate + bench=200 shapes). Deriving the arrays map-side deletes
-    // the verify-stage exchange instead of pruning it: the only
+    // materialization + extra exchanges;
+    // `tools/bench_exactjoin_r14.json`, 1×/100×, gate + bench=200
+    // shapes). Deriving the arrays map-side deletes the verify-stage
+    // exchange instead of pruning it: the only
     // corpus-sized exchanges left are the df rollup and the prefix
     // window — both candidate-front-end costs the algorithm needs.
     val base = withShingles(docs.select($"doc_id", $"text"), "sh")
@@ -1689,7 +1690,8 @@ object Dedup {
     // corpus arrays through the candidate join ONLY (broadcastable when
     // contamination is sparse) instead of re-collecting every corpus
     // doc's tokens through a full exchange. Measured vs the aggregate
-    // and semi-join-pruned formulations in ExactJoinProbe: 16.2 → 10.1 s
+    // and semi-join-pruned formulations (PLANS.md, the round-14 exact
+    // join entry; `tools/bench_exactjoin_r14.json`): 16.2 → 10.1 s
     // on the saturated 100× gate, 10.0 → 6.6 s at realistic density.
     val aBase = withShingles(corpus.select($"doc_id", $"text"), "sh")
       .select($"doc_id", $"sh").persistScoped()

@@ -388,19 +388,13 @@ object Sharding {
     * increment's per-shard counts to the prior `_shards.json` —
     * placement is deterministic, so counts are additive and the corpus
     * is never rescanned. (If the prior manifest is missing we fall back
-    * to one full count, loudly assuming a legacy layout.)
+    * to one full count, loudly assuming a legacy layout.) `orderCol`
+    * sets the increment's intra-shard order, as in
+    * [[writeTrainingShards]]; existing files keep theirs.
     */
   def appendToShards(
-      df: DataFrame, docId: String, outDir: String, n: Int): DataFrame =
-    appendToShards(df, docId, outDir, n, orderCol = None)
-
-  /** [[appendToShards]] with an explicit intra-shard order column for
-    * the increment's files (the [[writeTrainingShards]] overload's
-    * twin — appended files get their own internal order without
-    * touching existing ones). */
-  def appendToShards(
       df: DataFrame, docId: String, outDir: String, n: Int,
-      orderCol: Option[String]): DataFrame = {
+      orderCol: Option[String] = None): DataFrame = {
     val s = df.sparkSession
     val ord = orderCol.map(col).getOrElse(col(docId))
     // snapshot the file listing so the increment's counts come from

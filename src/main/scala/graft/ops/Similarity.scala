@@ -508,8 +508,9 @@ object Similarity {
     * deployment knobs (k=16 is fixture scale; a 100 TB corpus wants
     * k ≈ √N lists so each probe touches ~nprobe·N/k vectors). The
     * catalog query pins (k=16, iters=2) so the DuckDB oracle's unrolled
-    * k-means CTE stays its exact twin; IvfSpec and graft.tools.IvfSweep
-    * exercise larger k through this entry point.
+    * k-means CTE stays its exact twin; IvfSpec exercises larger k
+    * through this entry point (PLANS.md, "IVF recall/cost at deployment
+    * k on the 10× fixture").
     */
   /** The k-means front end shared by [[ivf]] and [[semanticDedup]]:
     * quantized embedding table (persisted — every training pass and
@@ -895,9 +896,8 @@ object Similarity {
     * synthetic embeddings, the hardest case for ANN. On clustered
     * corpora the same path needs only a 1.6–4.7 % probe fraction for
     * recall@3 0.98–1.0 — MEASURED on mixture-of-Gaussians fixtures at
-    * three separations (`tools/ClusteredFixture` + `tools/PqRecall`;
-    * PLANS.md r11 table), vs 0.24–0.41 at those fractions on the
-    * isotropic fixture.
+    * three separations (PLANS.md r11 table), vs 0.24–0.41 at those
+    * fractions on the isotropic fixture.
     *
     * At 100 TB this is the index layout that actually serves: inverted
     * lists bound candidates to ~nprobe·N/k vectors, the stored index
@@ -1016,8 +1016,8 @@ object Similarity {
   private[graft] def ivfPqFused(s: SparkSession, dir: String): DataFrame =
     ivfPqWithParams(s, dir, ivfPqK, ivfIters, ivfPqNprobe, ivfPqShortlist)
 
-  /** [[ivfPq]] with explicit deployment knobs — graft.tools.PqRecall
-    * sweeps (k, nprobe, R) through this entry point; the catalog row
+  /** [[ivfPq]] with explicit deployment knobs — the (k, nprobe, R)
+    * sweeps in PLANS.md ran through this entry point; the catalog row
     * pins the named constants so the oracle chain stays its twin.
     */
   private[graft] def ivfPqWithParams(s: SparkSession, dir: String,
@@ -2066,7 +2066,7 @@ object Similarity {
     * size, not the corpus.
     *
     * The k knob is MEASURED at high cluster occupancy, not asserted
-    * (`tools/semadmit_occupancy_r17.json`, SemAdmitSweep at 40 ticks ×
+    * (`tools/semadmit_occupancy_r17.json`, 40 ticks ×
     * 4k vectors): once the cosine term dominates, late per-tick wall
     * scales exactly 1/k (k=4 → k=16 cut it 4.43× against a 4× cosine
     * ratio), and at k=64 a 40×-grown index runs at the fixed per-tick

@@ -402,7 +402,7 @@ object TextAnalysis {
     *
     * Rank agreement vs Lucene measured per mode
     * (`tools/bm25_rank_agreement_r17.json` + the r18 lucene leg,
-    * graft.tools.Bm25RankAgreement): `exact` agrees 1.0 on single-term
+    * `tools/bm25_rank_agreement_r18.json`): `exact` agrees 1.0 on single-term
     * queries and mean 0.96/0.84/0.69 top-5 for 2/4/8-term queries on a
     * skewed 50k corpus; `lucene` is EXACTLY Lucene's formula, so
     * overlap is 1.0 at every query length by construction (the probe's
@@ -509,9 +509,8 @@ object TextAnalysis {
     * (2N−2df+1)/(2df+1), NOT rank-equivalent to an external ln-based
     * retriever for multi-term sums — a sum of odds ratios weights
     * rare terms more steeply than a sum of logs. MEASURED
-    * (`tools/bm25_rank_agreement_r17.json`, graft.tools
-    * .Bm25RankAgreement — probe recomputation asserted bit-equal to
-    * this path before comparing): vs Lucene's always-positive
+    * (`tools/bm25_rank_agreement_r17.json` — probe recomputation
+    * asserted bit-equal to this path before comparing): vs Lucene's always-positive
     * ln(1+odds), single-term queries agree EXACTLY (overlap 1.0 — both
     * idfs are positive per-query constants, so per-term doc order is
     * the saturation order in both), and multi-term top-k overlap on a
@@ -621,7 +620,7 @@ object TextAnalysis {
     * write requires ordering by its partition columns, and when the
     * child's ordering doesn't already satisfy that, Spark inserts its
     * own Sort(bucket) ON TOP — silently destroying the term clustering
-    * (tools/Bm25PruneProbe caught exactly this: r15's
+    * (`tools/bm25_prune_r16.json` caught exactly this: r15's
     * sort(term, doc_id) produced row groups whose term range spanned
     * the whole bucket, byte-identical to an unsorted write).
     */

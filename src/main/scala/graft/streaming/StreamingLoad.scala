@@ -1,7 +1,11 @@
 package graft.streaming
 
+import graft.CacheScope
+import graft.connect.Sources
 import graft.model.{ConnectionSpec, LoadStep}
+import graft.ops.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming LoadStep dispatch — the sink half of declarative streaming
@@ -16,7 +20,19 @@ import org.apache.spark.sql.streaming.Trigger
   * exactly-once file-source semantics.
   *
   * Modes:
-  *  - `append`: plain file-format streaming sink (parquet/csv/json/orc).
+  *  - `append`: plain file-format streaming sink (parquet/csv/json/orc)
+  *    with Spark's exactly-once `_spark_metadata` log.
+  *  - `append` with `annIndex` or `shardBy`/`shards`: one `foreachBatch`
+  *    applies the per-tick passes ([[tickPasses]]) and hands each
+  *    micro-batch to the batch sink, [[Sources.write]], with the
+  *    connection's options merged under the step's — so a stream
+  *    writes the ANN-index and shard layouts with exactly the batch
+  *    load's code and refusals. `bm25Index` is the one streaming-only
+  *    sink in that `foreachBatch`: each batch id becomes its own index
+  *    generation (TextAnalysis.maintainBm25Index), idempotent on
+  *    replay. The index and shard appends are AT-LEAST-ONCE across a
+  *    crash-and-retry (a replayed batch appends its rows again); use
+  *    the manifest-committed upsert when exactly-once matters.
   *  - `upsert`: CDC merge by key/version into a bucketed parquet
   *    snapshot — [[StreamOps.upsertToParquetBucketed]] (rename-swap;
   *    HDFS/local) or, with option `commit=manifest`,
@@ -45,10 +61,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingLoad {
 
-  private def resolve(base: Option[String], p: String): String =
-    if (p.startsWith("/") || p.contains("://")) p
-    else base.map(b => s"$b/$p").getOrElse(p)
-
   /** Checkpoint resolution (see class doc; unit-tested directly):
     * step-level value wins verbatim, connection-level value gets
     * `/<step.name>` appended so distinct steps never collide —
@@ -58,14 +70,13 @@ object StreamingLoad {
       conn: ConnectionSpec, step: LoadStep,
       soleConnectionLoad: Boolean = false,
       legacyHasCheckpoint: String => Boolean = _ => false): String = {
-    val base = conn.options.get("basePath").orElse(conn.options.get("baseDir"))
     step.options.get("checkpointLocation") match {
-      case Some(p) => resolve(base, p)
+      case Some(p) => Sources.resolve(conn, p)
       case None =>
         val shared = conn.options.getOrElse("checkpointLocation",
           throw new IllegalArgumentException(
             s"load '${step.name}': streaming load needs option checkpointLocation"))
-        val legacy = resolve(base, shared)
+        val legacy = Sources.resolve(conn, shared)
         if (soleConnectionLoad && legacyHasCheckpoint(legacy)) legacy
         else s"$legacy/${step.name}"
     }
@@ -111,14 +122,51 @@ object StreamingLoad {
       graft.connect.Hfs.isFile(fs, new org.apache.hadoop.fs.Path(p, "metadata"))
   }
 
+  /** The per-tick passes of the foreachBatch sinks, each enabled by
+    * its path option (resolved like the target) and applied in this
+    * order: the decontamination lenses first — lexical BM25
+    * (`bm25DecontaminateIndex`, top-k per TICK, so a near-copy that
+    * ranks below k within one tick survives), exact n-gram
+    * (`exactDecontaminateIndex`, the frozen-index shuffle path) and
+    * semantic cosine (`semanticDecontaminateIndex`, default τ 950‰) —
+    * then admission, exact (`exactDedupIndex`) before semantic
+    * (`semanticDedupIndex`). A leaked row must never become the
+    * admitted representative that rejects clean arrivals. Each pass is
+    * a pure function of the tick and frozen or batch-id-keyed state,
+    * so the accumulated result equals the offline composition whatever
+    * the tick boundaries, and a replayed batch id replaces its own
+    * admission generation instead of self-rejecting against it. Bench
+    * sets are read against the micro-batch's session: streaming runs
+    * batches on a cloned session. */
+  private def tickPasses(b: DataFrame, bid: Long, conn: ConnectionSpec,
+      opts: Map[String, String]): DataFrame = {
+    val s = b.sparkSession
+    val passes: Seq[(String, (DataFrame, String) => DataFrame)] = Seq(
+      "bm25DecontaminateIndex" -> { (d, p) =>
+        val hits = TextAnalysis.bm25TopKOn(d, s.read.parquet(p),
+          opts.get("bm25DecontaminateK").map(_.toInt).getOrElse(20),
+          opts.get("bm25DecontaminateTokens").map(_.toInt).getOrElse(8))
+          .select(col("doc_id")).distinct()
+        d.join(hits, Seq("doc_id"), "left_anti")
+      },
+      "exactDecontaminateIndex" -> ((d, p) => Dedup.exactDecontaminateFrozen(
+        d, p, opts.get("exactDecontaminateTau").map(_.toLong))),
+      "semanticDecontaminateIndex" -> ((d, p) => Similarity.semanticDecontaminate(
+        s, d, s.read.parquet(p),
+        opts.get("semanticDecontaminateTau").map(_.toLong).getOrElse(950L))),
+      "exactDedupIndex" -> ((d, p) => Dedup.admitExactDedup(d, p, bid)),
+      "semanticDedupIndex" -> ((d, p) => Similarity.admitSemanticDedup(d, p, bid)))
+    passes.foldLeft(b) { case (d, (k, pass)) =>
+      opts.get(k).fold(d)(p => pass(d, Sources.resolve(conn, p)))
+    }
+  }
+
   def write(df: DataFrame, conn: ConnectionSpec, step: LoadStep,
       soleConnectionLoad: Boolean = true): Unit = {
     require(df.isStreaming, s"load '${step.name}': StreamingLoad needs a streaming frame")
     val merged = conn.options ++ step.options
-    val base = conn.options.get("basePath").orElse(conn.options.get("baseDir"))
-    val path = step.path.orElse(step.table).getOrElse(
-      throw new IllegalArgumentException(s"load '${step.name}': path required"))
-    val full = resolve(base, path)
+    val full = Sources.resolve(conn, step.path.orElse(step.table).getOrElse(
+      throw new IllegalArgumentException(s"load '${step.name}': path required")))
     val checkpoint = resolveCheckpoint(conn, step, soleConnectionLoad,
       legacy => hasCommittedCheckpoint(df.sparkSession, legacy))
     val provider = resolveStateStore(merged,
@@ -132,235 +180,22 @@ object StreamingLoad {
           StreamOps.upsertToParquetManifest(df, req("keyCol"), req("versionCol"), full, nb)
         else
           StreamOps.upsertToParquetBucketed(df, req("keyCol"), req("versionCol"), full, nb)
-      case "append" if merged.contains("annIndex") =>
-        // streaming ANN-index maintenance: each drained micro-batch is
-        // encoded against the frozen artifacts (pcaModel → rotated
-        // space) and appended to the index layout. Encoding is a pure
-        // per-row map, so append ≡ rebuild and arrival order never
-        // changes the index contents; crash-and-retry semantics are
-        // AT-LEAST-ONCE like the shard sink (a replayed batch appends
-        // its rows again — dedup by vec_id at probe time or rebuild).
-        val kind = merged("annIndex")
-        require(kind == "prefix" || kind == "ivfpq",
-          s"load '${step.name}': unknown annIndex kind '$kind' (supported: prefix, ivfpq)")
-        require(conn.format == "parquet",
-          s"load '${step.name}': annIndex layout requires parquet, got '${conn.format}'")
-        val dims = merged.get("dims").map(_.toInt)
-        // the PCA model is loaded ONCE (plain data,
-        // session-independent); the index columns must build against
-        // the MICRO-BATCH's session — streaming runs batches on a
-        // cloned session, and a function registered only on the outer
-        // session after the clone was taken does not resolve there
-        val model = merged.get("pcaModel")
-          .map(mp => graft.ops.Similarity.loadPcaModel(df.sparkSession, mp))
-        // the IvfPq model is DATAFRAMES (codebooks), so unlike the
-        // plain-data PCA model it must be loaded against the
-        // micro-batch's own session inside the loop (two KB-sized
-        // parquet reads per tick); only the path is validated up front
-        val ivfModelPath =
-          if (kind != "ivfpq") None
-          else Some(merged.getOrElse("ivfpqModel",
-            throw new IllegalArgumentException(
-              s"load '${step.name}': annIndex=ivfpq requires option " +
-                "'ivfpqModel' (frozen model path — train offline)")))
-        // optional "semanticDecontaminateIndex": EMBEDDING-space
-        // decontamination per tick — the third member of the streaming
-        // decontamination trio (exact n-gram overlap and lexical BM25
-        // live on the shard route, where TEXT streams; the semantic
-        // route lives HERE, on the embedding route, because paraphrased
-        // test leakage is only visible in representation space). Each
-        // drained micro-batch drops every row within cosine
-        // "semanticDecontaminateTau"/1000 of ANY vector in the frozen
-        // benchmark set at the given path BEFORE encoding and appending
-        // (Similarity.semanticDecontaminate: exact full-dim cosine, the
-        // bench side broadcast under its maxBenchRows guard — a
-        // decontamination pass must not have false negatives within its
-        // threshold). Corpus = the tick, so per-tick cost is
-        // batch-sized by construction, and because the drop is a pure
-        // per-row predicate against a FROZEN set, stream ≡ batch: the
-        // accumulated index equals an offline decontaminate-then-build
-        // whatever the tick boundaries (spec-pinned). Default τ = 950‰,
-        // the q_emb_decontam gate row's threshold.
-        val semBench = merged.get("semanticDecontaminateIndex").map(resolve(base, _))
-        val semTau = merged.get("semanticDecontaminateTau").map(_.toLong).getOrElse(950L)
-        // optional "semanticDedupIndex": arrival-order SEMANTIC dedup
-        // admission per tick — the embedding sibling of the shard
-        // route's exactDedupIndex. Each drained micro-batch is admitted
-        // against (and into) a createSemanticDedupIndex layout BEFORE
-        // the ANN-index append: within the tick, SemDeDup's pair rule
-        // under the index's frozen codebook; across ticks, any vector
-        // within cosine τ of an already-admitted one is rejected.
-        // Replay after a crash is idempotent per batch id (the batch's
-        // own generation is replaced, never self-rejected); schedule
-        // compact_semantic_dedup_index between drains to fold
-        // generations. Order per tick: decontaminate (drop benchmark
-        // leakage first — a leaked vector must never become the
-        // admitted representative that rejects clean arrivals), then
-        // admit, then append.
-        val semDedupIdx = merged.get("semanticDedupIndex").map(resolve(base, _))
-        df.writeStream.foreachBatch { (b0: DataFrame, bid: Long) =>
-          graft.CacheScope.scoped {
-          val bs = b0.sparkSession
-          val cleaned = semBench match {
-            case Some(p) => graft.ops.Similarity.semanticDecontaminate(
-              bs, b0, bs.read.parquet(p), semTau)
-            case None => b0
-          }
-          val b = semDedupIdx match {
-            case Some(p) => graft.ops.Similarity.admitSemanticDedup(cleaned, p, bid)
-            case None => cleaned
-          }
-          ivfModelPath match {
-            case Some(mp) =>
-              val im = graft.ops.Similarity.loadIvfPqModel(bs, mp)
-              // first tick creates the layout (GROUPED by default —
-              // explicit listsPerDir or the k-adaptive default;
-              // indexLayout=flat for the legacy layout), later ticks
-              // self-route off the layout marker — maintainIvfPqIndex
-              // fails loudly on a width/layout conflict
-              graft.ops.Similarity.maintainIvfPqIndex(
-                graft.ops.Similarity.indexIvfPq(bs, b, im), full,
-                merged.get("listsPerDir").map(_.toInt),
-                flat = merged.get("indexLayout").contains("flat"),
-                // width from the MODEL's list count, not the tick's
-                // max centroid: a small first tick under a large-k
-                // model would otherwise freeze a too-narrow width
-                // (by-name — counted only when the layout is created)
-                nLists = Some(im.coarse.count()))
-            case None =>
-              val idx = model match {
-                case Some(m) => graft.ops.Similarity.buildRotatedPrefixIndex(
-                  bs, b, m, dims.getOrElse(m.k))
-                case None => graft.ops.Similarity.buildPrefixIndex(
-                  bs, b, dims.getOrElse(graft.ops.Similarity.prefixDims))
-              }
-              graft.ops.Similarity.appendPrefixIndex(idx, full)
-          }
-          // The load owns the tick's terminal action; the scoped block
-          // around this tick drains ITS OWN persisted intermediates on
-          // exit (CacheScope contract — without it a long-running
-          // scheduled stream accumulates strong Dataset refs +
-          // MEMORY_AND_DISK blocks across ticks). Per-tick scoping,
-          // not a global drain: drain() would also unpersist the live
-          // intermediates of any OTHER pipeline ticking concurrently
-          // in this JVM — correctness-safe but recompute thrash.
-          }
-          ()
-        }.outputMode("append")
-      case "append" if merged.contains("bm25Index") =>
-        // streaming BM25-index maintenance: each drained micro-batch is
-        // appended to the inverted-index layout as its own generation
-        // (TextAnalysis.maintainBm25Index — the annIndex sibling for
-        // the retrieval family). All index statistics are additive, so
-        // append ≡ rebuild holds EXACTLY whatever the arrival order;
-        // crash-and-retry is IDEMPOTENT PER BATCH ID (the batch's own
-        // generation is replaced, never double-counted). Schedule
-        // compact_bm25_index between drains to fold generations.
-        require(conn.format == "parquet",
+      case "append" if Seq("annIndex", "bm25Index", "shardBy", "shards").exists(merged.contains) =>
+        // an annIndex wins over bm25Index, which wins over a shard layout
+        val bm25 = merged.contains("bm25Index") && !merged.contains("annIndex")
+        require(!bm25 || conn.format == "parquet",
           s"load '${step.name}': bm25Index layout requires parquet, got '${conn.format}'")
-        val buckets = merged.get("bm25Buckets").map(_.toInt)
+        // the streaming route reads the connection's options too
+        val batchStep = step.copy(options = merged)
         df.writeStream.foreachBatch { (b: DataFrame, bid: Long) =>
-          // per-tick scope, not a global drain (see the annIndex case)
-          graft.CacheScope.scoped {
-            graft.ops.TextAnalysis.maintainBm25Index(b, full, bid, buckets)
-          }
-          ()
-        }.outputMode("append")
-      case "append" if merged.contains("shardBy") || merged.contains("shards") =>
-        // streaming curation endpoint: each drained micro-batch extends
-        // the deterministic training-shard layout additively
-        // (Sharding.appendToShards — placement is a pure function, so
-        // arrival order never changes membership). Semantics across a
-        // crash-and-retry are AT-LEAST-ONCE (a replayed batch appends
-        // again, like any non-idempotent foreachBatch sink); use the
-        // manifest-committed upsert mode when exactly-once matters.
-        val key = merged.getOrElse("shardBy", throw new IllegalArgumentException(
-          s"load '${step.name}': shardBy and shards must be set together"))
-        val n = merged.getOrElse("shards", throw new IllegalArgumentException(
-          s"load '${step.name}': shardBy and shards must be set together")).toInt
-        require(conn.format == "parquet",
-          s"load '${step.name}': shard layout requires parquet, got '${conn.format}'")
-        // optional "exactDedupIndex": admit each micro-batch against
-        // (and into) an exact-dedup prefix index BEFORE sharding —
-        // "dedup documents as they arrive" with the PPJoin
-        // no-false-negatives guarantee (Dedup.admitExactDedup); the
-        // index path resolves against the connection like the target
-        val dedupIdx = merged.get("exactDedupIndex").map(resolve(base, _))
-        // optional "exactDecontaminateIndex": run the frozen-index
-        // decontamination SHUFFLE path (Dedup.exactDecontaminateFrozen)
-        // on each drained micro-batch — the over-ceiling route for
-        // benches too large for the per-row broadcast serve
-        // (exactDecontaminateServe's maxBenchShingles guard). Inside
-        // foreachBatch the frame is a plain batch DataFrame, so the
-        // candidate join + exact verify run per tick with no state and
-        // no broadcast ceiling; "exactDecontaminateTau" raises the
-        // serving threshold above the built one (lowering errors).
-        val deconIdx = merged.get("exactDecontaminateIndex").map(resolve(base, _))
-        val deconTau = merged.get("exactDecontaminateTau").map(_.toLong)
-        // optional "bm25DecontaminateIndex": LEXICAL decontamination per
-        // tick — score each drained micro-batch against the frozen
-        // benchmark targets at the given path (corpus = the tick, so
-        // per-tick cost is batch-sized by construction) and anti-join
-        // the docs that land in some target's BM25 top-k. Catches
-        // lexically-close rephrasings the exact n-gram routes are blind
-        // to; pair with exactDecontaminateIndex for guaranteed overlap
-        // coverage. NOTE top-k is per TICK here: a near-copy that ranks
-        // below k within one tick survives (smaller ticks = stricter),
-        // which is the price of scoring incrementally — the batch
-        // bm25_decontaminate transform ranks against the full corpus.
-        val bm25Bench = merged.get("bm25DecontaminateIndex").map(resolve(base, _))
-        val bm25K = merged.get("bm25DecontaminateK").map(_.toInt).getOrElse(20)
-        val bm25Toks = merged.get("bm25DecontaminateTokens").map(_.toInt).getOrElse(8)
-        // optional "semanticDecontaminateIndex"/"semanticDedupIndex":
-        // the EMBEDDING-space twins of the lexical/exact options above,
-        // for shard loads whose rows carry (vec_id, embedding) next to
-        // (doc_id, text) — a curation endpoint can then compose ALL the
-        // routes in one drained tick. Order per tick is decontaminate →
-        // admit → append, decontamination lenses first (exact n-gram,
-        // lexical BM25, semantic cosine — each catches leaks the others
-        // provably miss), THEN admission (exact, then semantic): a
-        // leaked doc must never become the admitted representative that
-        // rejects clean arrivals (StreamingPipelineSpec pins the
-        // composed lifecycle against an offline composition).
-        val semBench2 = merged.get("semanticDecontaminateIndex").map(resolve(base, _))
-        val semTau2 = merged.get("semanticDecontaminateTau").map(_.toLong).getOrElse(950L)
-        val semDedupIdx2 = merged.get("semanticDedupIndex").map(resolve(base, _))
-        df.writeStream.foreachBatch { (b: DataFrame, bid: Long) =>
-          graft.CacheScope.scoped {
-          val lexCleaned = bm25Bench match {
-            case Some(p) =>
-              // bench read against the micro-batch's session
-              // (cloned-session rule); serving-batch size is guarded
-              // loudly inside bm25RanksOn
-              val hits = graft.ops.TextAnalysis
-                .bm25TopKOn(b, b.sparkSession.read.parquet(p), bm25K, bm25Toks)
-                .select(org.apache.spark.sql.functions.col("doc_id")).distinct()
-              b.join(hits, Seq("doc_id"), "left_anti")
-            case None => b
-          }
-          val exCleaned = deconIdx match {
-            case Some(p) => graft.ops.Dedup.exactDecontaminateFrozen(lexCleaned, p, deconTau)
-            case None => lexCleaned
-          }
-          val cleaned = semBench2 match {
-            case Some(p) => graft.ops.Similarity.semanticDecontaminate(
-              b.sparkSession, exCleaned, b.sparkSession.read.parquet(p), semTau2)
-            case None => exCleaned
-          }
-          // the batch id makes the index append idempotent per batch:
-          // a replay after a partial failure recomputes the same
-          // admitted set instead of self-rejecting against its own
-          // orphaned index rows (which would silently drop those docs)
-          val exAdmitted = dedupIdx match {
-            case Some(p) => graft.ops.Dedup.admitExactDedup(cleaned, p, bid)
-            case None => cleaned
-          }
-          val admitted = semDedupIdx2 match {
-            case Some(p) => graft.ops.Similarity.admitSemanticDedup(exAdmitted, p, bid)
-            case None => exAdmitted
-          }
-          graft.ops.Sharding.appendToShards(admitted, key, full, n)
-          // per-tick scope, not a global drain (see the annIndex case)
+          // the tick owns its terminal action, so its own scope drains
+          // the intermediates it persisted; a global drain would also
+          // drop those of a pipeline ticking concurrently in this JVM
+          CacheScope.scoped {
+            val admitted = tickPasses(b, bid, conn, merged)
+            if (bm25) TextAnalysis.maintainBm25Index(admitted, full, bid,
+              merged.get("bm25Buckets").map(_.toInt))
+            else Sources.write(admitted, conn, batchStep)
           }
           ()
         }.outputMode("append")

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * before the write so `t_cur`/`t_shard` time THEIR plans, not a
   * replay of the replication.
   *
-  * Same discipline as [[CurationBench]]: every stage forced
+  * Same discipline as the curation chain timings in PLANS.md
+  * (`tools/curation_bench_r11b.jsonl`): every stage forced
   * independently, caches dropped between stages, ONE JSON line out
   * (per-stage seconds + retention counts). The epoch target is fixed
   * (20k tokens/source), so the replication REGIME shifts with scale —

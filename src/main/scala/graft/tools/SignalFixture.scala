@@ -30,8 +30,9 @@ import org.apache.spark.sql.functions._
   * soup words), so a 10× signal fixture trains the same concept at
   * 10× the evidence.
   *
-  * Only `documents.parquet` is written — every stage of
-  * `graft.tools.CurationBench` reads just the documents table.
+  * Only `documents.parquet` is written — every curation stage
+  * (`tools/curation_bench_r12_signal.jsonl`) reads just the documents
+  * table.
   *
   * Usage: SignalFixture <srcSfDir> <outDir> [signalPct=30]
   */

@@ -96,6 +96,42 @@ class CoverageSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"env reads in graft/ops: ${hits.mkString(", ")}")
   }
 
+  /** (path under src/main/scala/graft, 1-based line, text) for every
+    * line of the shipped sources outside CacheScope itself. */
+  private lazy val mainLines: Seq[(String, Int, String)] = {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"$root missing")
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally files.close()
+  }.map(f => (java.nio.file.Paths.get("src/main/scala/graft").relativize(f).toString, f))
+    .filterNot(_._1 == "CacheScope.scala")
+    .flatMap { case (rel, f) =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+        .map { case (line, i) => (rel, i + 1, line) }
+    }
+
+  test("one run boundary, one sink: cache scopes, cache() and the base-path rule") {
+    def hits(re: scala.util.matching.Regex) =
+      mainLines.filter(l => re.findFirstIn(l._3).isDefined)
+    // the two scopes the engine owns: a batch run and a streaming tick
+    val scopes = hits("""CacheScope\.scoped\b""".r).map(_._1)
+    assert(scopes.sorted == Seq("exec/PipelineRunner.scala", "streaming/StreamingLoad.scala"),
+      s"CacheScope.scoped sites: $scopes")
+    val ticks = hits("""\.foreachBatch\b""".r).filter(_._1 == "streaming/StreamingLoad.scala")
+    assert(ticks.size == 1, s"StreamingLoad foreachBatch sites: $ticks")
+    val caches = hits("""\.cache\(\)""".r)
+    assert(caches.isEmpty, s".cache() outside CacheScope: $caches")
+    // a read of a connection's base path, not Spark's reader option
+    val baseReads = hits("""(get|getOrElse|contains|options)\("base(Path|Dir)"""".r)
+    val outside = baseReads.filterNot { case (rel, line, _) =>
+      rel == "connect/ConnectionService.scala" || (rel == "connect/Sources.scala" &&
+        mainLines.filter(l => l._1 == rel && l._2 <= line && l._3.contains(" def "))
+          .lastOption.exists(_._3.contains("def resolve(")))
+    }
+    assert(outside.isEmpty, s"base path read outside Sources.resolve: $outside")
+  }
+
   test("catalog names are unique (duplicate entries would shadow in byName)") {
     val dupes = Catalog.entries.groupBy(_.name).filter(_._2.size > 1).keys
     assert(dupes.isEmpty, s"duplicate catalog names: ${dupes.mkString(", ")}")

@@ -51,6 +51,10 @@ class ConnectServiceSpec extends SparkSpec {
     assert(back.count() == 2)
     assert(back.schema.fieldNames.toSeq == Seq("id", "tag", "v"))
     assert(back.filter($"tag" === "y").select($"v").as[Double].head() == 2.5)
+    // an absolute path wins over the connection's basePath
+    val elsewhere = conn.copy(options = Map("basePath" -> tmpDir("graft-csv-base").toString))
+    assert(Sources.read(spark, elsewhere,
+      ExtractStep("abs", 1, "c", path = Some(s"$dir/out"))).count() == 2)
   }
 
   test("partitionBy load writes hive layout and readers prune partitions") {

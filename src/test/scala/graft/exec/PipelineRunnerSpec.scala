@@ -177,6 +177,41 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dataDir/out4").count() == 4)
   }
 
+  test("a batch run releases what it cached: a re-run reads rows landed in between") {
+    import graft.CacheScope.Scoped
+    val (repo, dataDir) = setup()
+    val registry = new TransformRegistry
+    registry.register("persist_input", df => df.filter($"amount" > 0).persistScoped())
+    val landed = tmpDir("graft-landed")
+    Seq((5L, "c", 50.0), (6L, "c", 60.0)).toDF("id", "tag", "amount")
+      .coalesce(1).write.mode("overwrite").parquet(landed.toString)
+    val landedFile = landed.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val runner = new PipelineRunner(spark, repo, registry)
+    val kinds = Seq(""""kind":"named","transformName":"persist_input"""", """"kind":"cache"""")
+    kinds.zipWithIndex.foreach { case (kind, i) =>
+      spark.read.parquet(s"$dataDir/src").write.parquet(s"$dataDir/src$i")
+      val spec = pipeline(
+        s"""{"id":"c$i","name":"cached","steps":[
+           |{"stepType":"extract","name":"src","order":1,"connectionId":"local","path":"src$i"},
+           |{"stepType":"transform","name":"keep","order":2,$kind},
+           |{"stepType":"load","name":"sink","order":3,"connectionId":"local","path":"cached$i","mode":"replace"}
+           |]}""".stripMargin)
+      def runReleases(): Unit = {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        assert(runner.run(spec).status == "success")
+        val after = spark.sparkContext.getPersistentRDDs.keySet
+        assert(after.subsetOf(before), s"$kind: run left ${after -- before} persisted")
+      }
+      runReleases()
+      assert(spark.read.parquet(s"$dataDir/cached$i").count() == 4)
+      // a file landed by plain copy, as an external writer would
+      java.nio.file.Files.copy(landedFile.toPath,
+        java.nio.file.Paths.get(s"$dataDir/src$i/part-landed.parquet"))
+      runReleases()
+      assert(spark.read.parquet(s"$dataDir/cached$i").count() == 6, kind)
+    }
+  }
+
   test("error path: history running->error and reraise") {
     val (repo, _) = setup()
     val bad = pipeline(

@@ -1355,6 +1355,72 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(idxIds.size == idxIds.distinct.size, "replay left duplicate index rows")
   }
 
+  test("streaming shard load with orderCol writes each shard in the batch append's order") {
+    val dataDir = tmpDir("graft-stream-order").toString
+    val repo = new Repository(tmpDir("graft-stream-order-repo"))
+    val conn = ConnectionSpec("local", "local files", "parquet", Map("basePath" -> dataDir))
+    repo.saveConnection(conn)
+    // rank runs against doc_id, so the placement-key default order differs
+    val docs = (0L until 60L).map(i => (i, s"doc $i", 60L - i)).toDF("doc_id", "text", "rank")
+    docs.coalesce(1).write.parquet(s"$dataDir/landing")
+    val shardOpts = Map("shardBy" -> "doc_id", "shards" -> "4", "orderCol" -> "rank")
+    val p = PipelineSpec("order-stream", "landing-to-ordered-shards", None, enabled = true,
+      steps = List(
+        ExtractStep("e", 1, "local", path = Some("landing"), options = Map("streaming" -> "true")),
+        LoadStep("l", 2, "local", path = Some("streamed"), mode = "append",
+          options = shardOpts + ("checkpointLocation" -> "ck"))))
+    repo.savePipeline(p)
+    assert(new PipelineRunner(spark, repo).run(p).status == "success")
+    graft.connect.Sources.write(docs, conn,
+      LoadStep("b", 1, "local", path = Some("batch"), mode = "append", options = shardOpts))
+    // doc ids per shard, in file order
+    def shardOrder(dir: String): Map[String, Seq[Long]] =
+      new java.io.File(s"$dataDir/$dir").listFiles().filter(_.getName.startsWith("shard="))
+        .map { d =>
+          val files = d.listFiles().map(_.getPath).filter(_.endsWith(".parquet")).sorted
+          d.getName -> files.toSeq.flatMap(f =>
+            spark.read.parquet(f).select($"doc_id").as[Long].collect().toSeq)
+        }.toMap
+    val streamed = shardOrder("streamed")
+    assert(streamed.values.map(_.size).sum == 60)
+    assert(streamed == shardOrder("batch"))
+    assert(streamed.values.forall(ids => ids == ids.sorted.reverse), streamed)
+  }
+
+  test("streaming ANN and shard loads refuse what the batch sink refuses") {
+    import graft.ops.Similarity
+    val dataDir = tmpDir("graft-stream-refuse").toString
+    val repo = new Repository(tmpDir("graft-stream-refuse-repo"))
+    repo.saveConnection(ConnectionSpec("local", "local files", "parquet",
+      Map("basePath" -> dataDir)))
+    val rnd = new scala.util.Random(31)
+    val vecs = (0L until 120L).map(id => (id, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val modelPath = s"$dataDir/ivfm"
+    Similarity.saveIvfPqModel(Similarity.trainIvfPq(spark, vecs), modelPath)
+    graft.CacheScope.drain()
+    vecs.coalesce(1).write.parquet(s"$dataDir/vecs")
+    (0L until 20L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dataDir/docs")
+    def failedRun(id: String, landing: String, opts: Map[String, String]): String = {
+      val p = PipelineSpec(id, id, None, enabled = true, steps = List(
+        ExtractStep("e", 1, "local", path = Some(landing), options = Map("streaming" -> "true")),
+        LoadStep("l", 2, "local", path = Some(s"$id-out"), mode = "append",
+          options = opts + ("checkpointLocation" -> s"ck-$id"))))
+      repo.savePipeline(p)
+      intercept[Exception](new PipelineRunner(spark, repo).run(p))
+      // the history row carries the batch sink's own message
+      assert(repo.history(id).map(_.status) == Seq("running", "error"))
+      repo.history(id).last.message
+    }
+    val ivf = failedRun("ivf-bogus", "vecs",
+      Map("annIndex" -> "ivfpq", "ivfpqModel" -> modelPath, "indexLayout" -> "bogus"))
+    assert(ivf.contains("unknown indexLayout 'bogus'"), ivf)
+    val split = failedRun("split-append", "docs",
+      Map("shardBy" -> "doc_id", "shards" -> "4", "splitBy" -> "split"))
+    assert(split.contains("append addresses one split's directory"), split)
+  }
+
   test("streaming load without checkpointLocation fails fast") {
     val dataDir = tmpDir("graft-stream-nockpt").toString
     val repo = new Repository(tmpDir("graft-stream-repo2"))
