@@ -47,7 +47,7 @@ object Bench {
         System.err.println(s"[bench] warmup query $q failed on $warmupDir: ${e.getMessage}")
       }
     }
-    spark.sharedState.cacheManager.clearCache()
+    CacheScope.drain()
     // CALIBRATION SENTINELS (r14 verdict #3): fixture-independent,
     // pure-CPU/shuffle probes. cpu: codegen'd hash+sum over a range —
     // no IO, no shuffle. shuffle: range -> hash-partition -> count.
@@ -86,7 +86,6 @@ object Bench {
           false
         }
       CacheScope.drain()
-      spark.sharedState.cacheManager.clearCache()
       // a failing sentinel records -1, never its milliseconds-to-fail:
       // a near-zero "time" would read as an extra-quiet segment and
       // mask exactly the drift the track exists to catch — negative
@@ -167,7 +166,6 @@ object Bench {
       // each query is self-contained: drop its persisted intermediates
       // so 100 accumulated caches don't evict/slow later queries
       CacheScope.drain()
-      spark.sharedState.cacheManager.clearCache()
       if (!ok) failed += name
       else if (t < best.getOrElse(name, Double.MaxValue)) {
         best(name) = t

@@ -21,10 +21,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries are self-contained; don't let persisted intermediates
-      // pile up across the 100-query run (drain also empties the
-      // CacheScope registry so IT doesn't grow unboundedly either)
+      // and cuts pile up across the 100-query run
       CacheScope.drain()
-      spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

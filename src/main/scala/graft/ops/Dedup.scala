@@ -1021,27 +1021,9 @@ object Dedup {
     */
   private[graft] def dedupClustersRounds(s: SparkSession, dir: String, rounds: Int): DataFrame = {
     import s.implicits._
-    val pairs = bandPairs(bandsDf(s, dir).persistScoped())
-      .toDF("d1", "d2")
-      .persistScoped()
-    val edges = pairs.unionByName(pairs.select($"d2".as("d1"), $"d1".as("d2")))
-    var labels = Tables.t(s, dir, "documents").select($"doc_id", $"doc_id".as("label"))
-    for (_ <- 1 to rounds) {
-      val nbrMin = edges
-        .join(labels.select($"doc_id".as("nid"), $"label".as("nlabel")), $"d2" === $"nid")
-        .groupBy($"d1").agg(min($"nlabel").as("nmin"))
-      labels = labels
-        .join(nbrMin, labels("doc_id") === nbrMin("d1"), "left")
-        .select(labels("doc_id"),
-          least($"label", coalesce($"nmin", $"label")).as("label"))
-      // each round references the previous labels twice (self +
-      // neighbor-min), so the uncut lineage re-executes 2^rounds times —
-      // cheap here (r=3, all inputs read from the cached pair table;
-      // measured faster than three per-round cache builds). A
-      // many-round 100 TB run would checkpoint each round to truncate
-      // both the recompute and the plan.
-    }
-    labels
+    val pairs = bandPairs(bandsDf(s, dir).persistScoped()).toDF("d1", "d2")
+    minLabelRounds(pairs,
+      Tables.t(s, dir, "documents").select($"doc_id", $"doc_id".as("label")), rounds)
       .withColumn("cluster_size", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy($"label")))
       .select($"doc_id", $"label".as("cluster_id"), $"cluster_size")
@@ -1078,8 +1060,8 @@ object Dedup {
     val sym = edges.select($"src", $"dst")
       .unionByName(edges.select($"dst".as("src"), $"src".as("dst")))
       .distinct()
-      .localCheckpoint()
-    val labels0 = nodes.select($"id", $"id".as("label")).localCheckpoint()
+      .cutScoped()
+    val labels0 = nodes.select($"id", $"id".as("label")).cutScoped()
     untilStable("connectedComponents", maxRounds, checkpointDir)(labels0) {
       (labels, cut) =>
         val nbrMin = sym
@@ -1130,7 +1112,7 @@ object Dedup {
       .select(greatest($"src", $"dst").as("hi"), least($"src", $"dst").as("lo"))
       .filter($"hi" =!= $"lo")
       .distinct()
-      .localCheckpoint()
+      .cutScoped()
     val n0 = e0.count()
     val ((e, _), rounds) = untilStable(
         "connectedComponentsStar", maxRounds, checkpointDir)((e0, n0), n0 == 0) {
@@ -1167,6 +1149,25 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
       .distinct()
+
+  /** `rounds` fixed min-label rounds over the undirected (d1, d2)
+    * `pairs` from `labels0` (doc_id, label), as the gate oracles unroll
+    * them. Each round reads the previous labels twice, so the uncut
+    * lineage re-executes 2^rounds times — cheap at 3 rounds over the
+    * persisted pairs (measured faster than per-round cache builds); a
+    * many-round run cuts each round ([[connectedComponents]]). */
+  private def minLabelRounds(pairs: DataFrame, labels0: DataFrame, rounds: Int): DataFrame = {
+    import pairs.sparkSession.implicits._
+    val p = pairs.persistScoped()
+    val edges = p.unionByName(p.select($"d2".as("d1"), $"d1".as("d2")))
+    (1 to rounds).foldLeft(labels0) { (labels, _) =>
+      val nbrMin = edges
+        .join(labels.select($"doc_id".as("nid"), $"label".as("nlabel")), $"d2" === $"nid")
+        .groupBy($"d1").agg(min($"nlabel").as("nmin"))
+      labels.join(nbrMin, labels("doc_id") === nbrMin("d1"), "left")
+        .select(labels("doc_id"), least($"label", coalesce($"nmin", $"label")).as("label"))
+    }
+  }
 
   /** (nodes, candidate-pair edges) of the LSH band graph — shared by
     * both CC catalog rows.
@@ -2054,11 +2055,11 @@ object Dedup {
         inBatch.join(flagged, Seq("doc_id"), "left_anti")
       }
     }
-    // localCheckpoint BEFORE the writes: the admitted frame reads the
-    // index, and the writes below mutate it — an unpinned plan
-    // re-evaluated by the caller would see its own rows in the index
-    // and self-reject everything. Materializing cuts that lineage.
-    val admitted = admitted0.localCheckpoint()
+    // cut BEFORE the writes: the admitted frame reads the index, and
+    // the writes below mutate it — an unpinned plan re-evaluated by the
+    // caller would see its own rows in the index and self-reject
+    // everything. Materializing cuts that lineage.
+    val admitted = admitted0.cutScoped()
     // shingle-less docs (< 3 words) can never generate or verify a
     // candidate — dead index weight, and keeping them would let a
     // docs/ batch dir carry files while its prefix/ sibling has none
@@ -2360,20 +2361,9 @@ object Dedup {
     import s.implicits._
     val docs = Tables.t(s, dir, "documents")
       .select($"doc_id", $"text", $"lang", $"n_chars")
-    val pairs = prefixJoinPairsOn(docs.select($"doc_id", $"text"), 800L)
-      .select($"doc_a".as("d1"), $"doc_b".as("d2"))
-      .persistScoped()
-    val edges = pairs.unionByName(pairs.select($"d2".as("d1"), $"d1".as("d2")))
-    var labels = docs.select($"doc_id", $"doc_id".as("label"))
-    for (_ <- 1 to ccRounds) {
-      val nbrMin = edges
-        .join(labels.select($"doc_id".as("nid"), $"label".as("nlabel")), $"d2" === $"nid")
-        .groupBy($"d1").agg(min($"nlabel").as("nmin"))
-      labels = labels
-        .join(nbrMin, labels("doc_id") === nbrMin("d1"), "left")
-        .select(labels("doc_id"),
-          least($"label", coalesce($"nmin", $"label")).as("label"))
-    }
+    val labels = minLabelRounds(prefixJoinPairsOn(docs.select($"doc_id", $"text"), 800L)
+      .select($"doc_a".as("d1"), $"doc_b".as("d2")), docs.select($"doc_id", $"doc_id".as("label")),
+      ccRounds)
     val keep = labels
       .join(docs.select($"doc_id".as("kdoc"), $"n_chars"), $"doc_id" === $"kdoc")
       .groupBy($"label")

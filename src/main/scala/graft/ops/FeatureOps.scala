@@ -102,24 +102,21 @@ object FeatureOps {
     // NOTE: the boundary pass is EAGER (count + indexed scan at
     // DataFrame-construction time) — unavoidable for collected
     // boundaries; plan-only callers (explain audits) pay it once.
-    // try/finally so an executor failure can't leak the cached sort.
     val boundKeyAt: Map[Long, (Long, Long, Long)] =
-      try {
-        if (n == 0) Map.empty
-        else {
-          val bucket = n / 10
-          val rem = n % 10
-          // 1-indexed bucket k ends at 0-indexed global rank cum(k)-1;
-          // keep duplicates (n < 10 degenerates some buckets to empty)
-          // so the comparison ladder still counts multiplicity like
-          // NTILE does
-          val wanted = (1 to 9).map(k => k.toLong * bucket + math.min(k, rem) - 1).toSet
-          sorted.rdd.zipWithIndex()
-            .filter { case (_, i) => wanted.contains(i) }
-            .map { case (r, i) => i -> ((r.getLong(2), r.getLong(0), r.getLong(1))) }
-            .collect().toMap
-        }
-      } finally sorted.unpersist()
+      if (n == 0) Map.empty
+      else {
+        val bucket = n / 10
+        val rem = n % 10
+        // 1-indexed bucket k ends at 0-indexed global rank cum(k)-1;
+        // keep duplicates (n < 10 degenerates some buckets to empty)
+        // so the comparison ladder still counts multiplicity like
+        // NTILE does
+        val wanted = (1 to 9).map(k => k.toLong * bucket + math.min(k, rem) - 1).toSet
+        sorted.rdd.zipWithIndex()
+          .filter { case (_, i) => wanted.contains(i) }
+          .map { case (r, i) => i -> ((r.getLong(2), r.getLong(0), r.getLong(1))) }
+          .collect().toMap
+      }
     if (n == 0) return rollup(base.withColumn("decile", lit(1L)))
     val bucket = n / 10
     val rem = n % 10

@@ -3,6 +3,7 @@ package graft.ops
 import graft.CatalogEntry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.CacheScope
 import graft.CacheScope.Scoped
 
 /** Graph analytics over the LSH candidate graph ([[Dedup.lshPairGraph]]:
@@ -388,11 +389,11 @@ object Graph {
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     import nodes.sparkSession.implicits._
     val edges = pairs.select($"src".as("u"), $"dst".as("v"))
-      .unionAll(pairs.select($"dst".as("u"), $"src".as("v"))).localCheckpoint()
+      .unionAll(pairs.select($"dst".as("u"), $"src".as("v"))).cutScoped()
     val deg = edges.groupBy($"u".as("id")).agg(count(lit(1)).as("deg"))
     val base = nodes.join(deg, Seq("id"), "left")
-      .select($"id", coalesce($"deg", lit(0L)).as("deg")).localCheckpoint()
-    val state0 = base.withColumn("rank", lit(1000000L)).localCheckpoint()
+      .select($"id", coalesce($"deg", lit(0L)).as("deg")).cutScoped()
+    val state0 = base.withColumn("rank", lit(1000000L)).cutScoped()
     val (state, rounds) = untilStable("pagerank", maxRounds, checkpointDir)(state0) {
       (state, cut) =>
         val contrib = state.filter($"deg" > 0)
@@ -649,10 +650,7 @@ object Graph {
     * unit-testable on synthetic graphs (pendant-chain cascade). */
   private[ops] def kcoreOf(pairs: DataFrame, k: Long, rounds: Int): DataFrame = {
     import pairs.sparkSession.implicits._
-    def degrees(e: DataFrame): DataFrame =
-      e.select($"src".as("id")).union(e.select($"dst".as("id")))
-        .groupBy($"id").agg(count(lit(1)).as("d"))
-    // each round's edge set is localCheckpoint(eager)-ed — the [[Dedup]]
+    // each round's edge set is cut (eager localCheckpoint) — the [[Dedup]]
     // cc loop convention, and here it is about LINEAGE, not replay:
     // every round references its predecessor through two join branches
     // plus the degree agg, so an ordinary cached plan still TRIPLES the
@@ -660,16 +658,19 @@ object Graph {
     // passes over the candidate-graph pipeline (measured: ~70 s at
     // EVERY sf — pure plan-compile time; checkpointed, ~2 s at sf0.1).
     // A many-round 100 TB run would use reliable checkpointing instead,
-    // exactly as cc's checkpointDir option documents.
-    var e = pairs.select($"src", $"dst").localCheckpoint(true)
+    // exactly as cc's checkpointDir option documents. Rounds release
+    // as in untilStable.
+    var e = pairs.select($"src", $"dst").cutScoped()
     for (_ <- 1 to rounds) {
-      val keep = degrees(e).filter($"d" >= k).select($"id")
+      val keep = degreesOf(e).filter($"degree" >= k).select($"id")
+      val prev = e
       e = e
         .join(keep.withColumnRenamed("id", "src"), Seq("src"))
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"))
-        .select($"src", $"dst").localCheckpoint(true)
+        .select($"src", $"dst").cutScoped()
+      CacheScope.release(prev)
     }
-    degrees(e).select($"id".as("doc_id"), $"d".as("core_degree"))
+    degreesOf(e).select($"id".as("doc_id"), $"degree".as("core_degree"))
       .orderBy($"doc_id")
   }
 
@@ -686,13 +687,10 @@ object Graph {
   def kcoreConverged(pairs: DataFrame, k: Long, maxRounds: Int = 100,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     import pairs.sparkSession.implicits._
-    def degrees(e: DataFrame): DataFrame =
-      e.select($"src".as("id")).union(e.select($"dst".as("id")))
-        .groupBy($"id").agg(count(lit(1)).as("d"))
-    val e0 = pairs.select($"src", $"dst").localCheckpoint(true)
+    val e0 = pairs.select($"src", $"dst").cutScoped()
     val ((e, _), rounds) = untilStable("k-core", maxRounds, checkpointDir)(
         (e0, e0.count())) { case ((e, nEdges), cut) =>
-      val keep = degrees(e).filter($"d" >= k).select($"id")
+      val keep = degreesOf(e).filter($"degree" >= k).select($"id")
       val next = cut(e
         .join(keep.withColumnRenamed("id", "src"), Seq("src"))
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"))
@@ -700,7 +698,7 @@ object Graph {
       val m = next.count()
       ((next, m), m == nEdges, s"$m edges left")
     }
-    (degrees(e).select($"id".as("doc_id"), $"d".as("core_degree"))
+    (degreesOf(e).select($"id".as("doc_id"), $"degree".as("core_degree"))
       .orderBy($"doc_id"), rounds)
   }
 
@@ -813,11 +811,11 @@ object Graph {
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     import nodes.sparkSession.implicits._
     val edges = pairs.select($"src".as("u"), $"dst".as("v"))
-      .unionAll(pairs.select($"dst".as("u"), $"src".as("v"))).localCheckpoint()
+      .unionAll(pairs.select($"dst".as("u"), $"src".as("v"))).cutScoped()
     // state carries (lbl, prev): the label now and one round ago —
     // exactly the history the 2-cycle test needs
     val state0 = nodes.select($"id", $"id".as("lbl"), $"id".as("prev"))
-      .localCheckpoint()
+      .cutScoped()
     val (state, rounds) = untilStable("label propagation", maxRounds, checkpointDir)(
         state0) { (state, cut) =>
       val neigh = edges.join(state.select($"id".as("u"), $"lbl"), Seq("u"))

@@ -4,6 +4,7 @@ import graft.{CatalogEntry, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.CacheScope
 import graft.CacheScope.Scoped
 
 /** Similarity search over the embedding column (builder-prompt north
@@ -200,7 +201,6 @@ object Similarity {
     */
   def prefixTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.CacheScope._
     val e = embBase(s, Tables.t(s, dir, "embeddings"))
     val ep = e
       .withColumn("pq", slice($"xq", 1, prefixDims))
@@ -312,7 +312,6 @@ object Similarity {
       shortlist: Int = prefixShortlist, k: Int = 3,
       excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
-    import graft.CacheScope._
     val qbase = embBase(s, queries)
       .select($"vec_id".as("qid"), $"xq".as("qxq"), $"n2".as("qn2"))
       .withColumn("qpq", slice($"qxq", 1, dims))
@@ -394,7 +393,6 @@ object Similarity {
       shortlist: Int = prefixShortlist, k: Int = 3,
       excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
-    import graft.CacheScope._
     require(dims >= 1 && dims <= model.k,
       s"dims must be in [1, model.k=${model.k}]: $dims")
     graft.functions.GraftExtensions.register(s)
@@ -617,7 +615,6 @@ object Similarity {
   private[ops] def kmeansTrainSeeded(base: DataFrame, seed: DataFrame,
       iters: Int): DataFrame = {
     import base.sparkSession.implicits._
-    import graft.CacheScope._
     def update(assigned: DataFrame): DataFrame = {
       val dims = assigned.join(
         base.select($"vec_id", posexplode($"xq").as(Seq("pos", "v"))), Seq("vec_id"))
@@ -1174,7 +1171,6 @@ object Similarity {
   def trainIvfPq(s: SparkSession, emb: DataFrame,
       k: Int = ivfPqK, iters: Int = ivfIters): IvfPqModel = {
     import s.implicits._
-    import graft.CacheScope._
     val base = embBase(s, emb)
     val cents = kmeansTrain(base, k, iters)
     val assigned = coarseAssign(base, cents).persistScoped()
@@ -1199,10 +1195,9 @@ object Similarity {
     */
   def indexIvfPq(s: SparkSession, emb: DataFrame, model: IvfPqModel): DataFrame = {
     import s.implicits._
-    import graft.CacheScope._
     val base = embBase(s, emb)
     val assigned = coarseAssign(base, model.coarse).persistScoped()
-    val subv = residualSubv(base, model.coarse, assigned).persistScoped()
+    val subv = residualSubv(base, model.coarse, assigned)
     assigned.join(pqAssign(subv, model.pq), Seq("vec_id"))
       .select($"vec_id", $"centroid", $"sub", $"code")
   }
@@ -1339,7 +1334,6 @@ object Similarity {
       require(k > 0, s"nLists must be positive: $k")
       saveIvfPqIndexGrouped(index, path, defaultListsPerDir(k))
     case None =>
-      import graft.CacheScope._
       val idx = index.persistScoped()
       val inferred = Option(
         idx.agg(org.apache.spark.sql.functions.max("centroid")).head().get(0))
@@ -1440,7 +1434,6 @@ object Similarity {
       listsPerDir: Option[Int] = None,
       topK: Int = 3): DataFrame = {
     import s.implicits._
-    import graft.CacheScope._
     val base = embBase(s, corpus)
     val qbase = embBase(s, queries).select($"vec_id".as("qid"), $"xq", $"n2")
     // LIST PRUNING: resolve the batch's probed-list union up front
@@ -2084,7 +2077,6 @@ object Similarity {
       batchId: Long): DataFrame = {
     val s = batch.sparkSession
     import s.implicits._
-    import graft.CacheScope._
     graft.connect.GenerationalIndex.requireLiveBatchId(batchId,
       "compactSemanticDedupIndex")
     val fs = graft.connect.Hfs.fs(s, path)
@@ -2132,12 +2124,12 @@ object Similarity {
         inKept.join(flagged, Seq("vec_id"), "left_anti")
       }
     }
-    // localCheckpoint BEFORE the write: the admitted frame reads the
+    // cut BEFORE the write: the admitted frame reads the
     // index, and the write below mutates it — an unpinned plan
     // re-evaluated by the caller would see its own rows and
     // self-reject (the admitExactDedup lesson)
     val keep = admitted0.select($"vec_id", $"xq", $"n2", $"centroid")
-      .localCheckpoint()
+      .cutScoped()
     // an all-rejected or empty batch writes NOTHING: a file-less batch
     // directory would break schema inference on later reads
     if (!keep.isEmpty) {
@@ -2259,7 +2251,6 @@ object Similarity {
   def rebucketSemanticDedupIndex(s: SparkSession, path: String,
       newK: Int, iters: Int = ivfIters): Long = {
     import s.implicits._
-    import graft.CacheScope._
     import org.apache.hadoop.fs.Path
     import graft.connect.Hfs
     require(newK >= 1 && iters >= 1,
@@ -2310,7 +2301,7 @@ object Similarity {
     require(cents.count() >= 1,
       "rebucketSemanticDedupIndex: trained codebook is empty")
     val assigned = coarseAssignWith(base, cents)
-      .localCheckpoint() // pin: the writes below mutate what it reads
+      .cutScoped() // pin: the writes below mutate what it reads
     val liveIds = live.map { lid =>
       roster.filter($"batch" === lid).select($"vec_id")
     }
@@ -2746,7 +2737,6 @@ object Similarity {
   private def pcaCore(s: SparkSession, embeddings: DataFrame,
       rounds: Int): (DataFrame, Map[Long, Long]) = {
     import s.implicits._
-    import graft.CacheScope._
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val e0 = embeddings
       .select($"vec_id", posexplode(quantize1e4($"embedding")).as(Seq("dim0", "q")))
@@ -2798,9 +2788,9 @@ object Similarity {
   def pcaTopKOn(s: SparkSession, embeddings: DataFrame,
       k: Int, rounds: Int): DataFrame = {
     import s.implicits._
-    import graft.CacheScope._
     require(k >= 1 && k <= 16, s"k components must be in [1,16]: $k")
     var frame = embeddings.select($"vec_id", $"embedding")
+    var held = Option.empty[DataFrame]
     val comps = Seq.newBuilder[(Long, Long, Long)]
     for (c <- 1 to k) {
       val (cx, v) = pcaCore(s, frame, rounds)
@@ -2822,15 +2812,18 @@ object Similarity {
           .groupBy($"vec_id")
           .agg(transform(array_sort(collect_list(struct($"dim", $"rx"))),
             p => p("rx").cast("float") / lit(100.0f)).as("embedding"))
-        // lineageCut (localCheckpoint), not persist+count: each
+        // lineage cut, not persist+count: each
         // deflation nests another join+rollup level onto the plan, and
         // by k=16 the driver OOMs just STRINGIFYING the accumulated
         // lineage (hit in the r12 truncation study) — the cut
         // materializes the frame AND truncates the plan, so per-round
         // driver work stays constant like the converge loops'
-        frame = lineageCut(defl, reliable = false)
+        // (nothing reads the previous component's cut after this one)
+        val ck = defl.cutScoped()
+        held.foreach(CacheScope.release)
+        held = Some(ck)
+        frame = freshLeaf(ck)
       }
-      cx.unpersist()
     }
     comps.result().toDF("component", "dim", "v").orderBy($"component", $"dim")
   }

@@ -2918,7 +2918,7 @@ object TextAnalysis {
         // truncate the chained-replace lineage periodically: at a
         // production merge budget the logical plan would otherwise
         // nest one projection per pass
-        if (pass % bpeCheckpointEvery == 0) vocab = vocab.localCheckpoint()
+        if (pass % bpeCheckpointEvery == 0) vocab = vocab.cutScoped()
       }
     }
     (merges.result(), vocab)
@@ -3260,7 +3260,6 @@ object TextAnalysis {
       posSources: Seq[String], rounds: Int)
       : (DataFrame, DataFrame, Map[String, Long]) = {
     import s.implicits._
-    import graft.CacheScope._
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val labeled = docsIn.select($"doc_id", $"source",
       when($"source".isin(posSources: _*), 1L).otherwise(-1L).as("y"),

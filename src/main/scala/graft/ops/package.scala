@@ -1,5 +1,6 @@
 package graft
 
+import graft.CacheScope._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,8 +46,8 @@ package object ops {
     s"(${dsumSql(expr, scale)} / COUNT($expr))"
 
   /** Lineage cut for iterate-until-converge loops: truncate the plan
-    * (reliable checkpoint, or executor-local blocks) AND rebuild the
-    * result as a fresh leaf so the origin plan's SIZE ESTIMATE is
+    * (a registered `CacheScope` cut) AND rebuild the result as a
+    * fresh leaf so the origin plan's SIZE ESTIMATE is
     * dropped along with its lineage. Without the rebuild,
     * `LogicalRDD.fromDataset` carries the source plan's `sizeInBytes`
     * forward — and size-only join estimation is a PRODUCT over
@@ -69,10 +70,12 @@ package object ops {
     * hint small hot frames explicitly (`broadcast(...)`) instead of
     * relying on the estimate this rebuild deliberately drops.
     */
-  def lineageCut(df: DataFrame, reliable: Boolean): DataFrame = {
-    val ck = if (reliable) df.checkpoint() else df.localCheckpoint()
+  def lineageCut(df: DataFrame, reliable: Boolean): DataFrame =
+    freshLeaf(df.cutScoped(reliable))
+
+  /** [[lineageCut]]'s rebuild of a cut `ck`, whose blocks it reads. */
+  private[ops] def freshLeaf(ck: DataFrame): DataFrame =
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
 
   /** Rounds between reliable checkpoints in [[untilStable]]. */
   private val reliableEvery = 5
@@ -95,6 +98,9 @@ package object ops {
     * a semantic bound: hitting it without a stable state is an error,
     * never a silent partial result. `stable = true` returns `init`
     * after zero rounds.
+    * Round r's cuts are released once round r+1's step has returned
+    * (its state reads its own cuts), so the loop holds one round's
+    * blocks whatever its round count; the final state's stay registered.
     */
   private[ops] def untilStable[S](what: String, maxRounds: Int,
       checkpointDir: Option[String])(init: S, stable: Boolean = false)(
@@ -104,10 +110,15 @@ package object ops {
     var done = stable
     var detail = ""
     var round = 0
+    var held = List.empty[DataFrame]
     while (!done && round < maxRounds) {
       round += 1
       val reliable = checkpointDir.isDefined && round % reliableEvery == 0
-      val (next, ok, why) = step(state, lineageCut(_, reliable))
+      var cuts = List.empty[DataFrame]
+      val (next, ok, why) = step(state,
+        df => { val ck = df.cutScoped(reliable); cuts ::= ck; freshLeaf(ck) })
+      held.foreach(CacheScope.release)
+      held = cuts
       state = next
       done = ok
       detail = why

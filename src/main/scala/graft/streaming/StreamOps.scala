@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.CacheScope
+import graft.CacheScope.Scoped
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
@@ -169,15 +171,16 @@ object StreamOps {
       }.toDF()
   }
 
-  /** foreachBatch sink that reuses the batch load path (SURVEY.md §2.B
-    * "Output modes/sinks": reuse batch loaders A7-A9 inside).
-    */
+  /** The one foreachBatch sink, reusing the batch load path (SURVEY.md
+    * §2.B "Output modes/sinks": reuse batch loaders A7-A9 inside). Each
+    * micro-batch is a [[CacheScope]] scope: what it persisted or cut is
+    * released when it ends, also when it fails. */
   def toForeachBatch(df: DataFrame, outputMode: String)(
       loadBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     df.writeStream
       .outputMode(outputMode)
       .foreachBatch((batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        loadBatch(batch.toDF(), id))
+        CacheScope.scoped(loadBatch(batch.toDF(), id)))
 
   /** Streaming CDC-style upsert into a parquet target — each
     * micro-batch MERGEs into the current snapshot on `keyCol` (last
@@ -282,12 +285,38 @@ object StreamOps {
     toForeachBatch(df, "append")((batch, _) =>
       mergeIntoBucketedSnapshot(batch, keyCol, versionCol, targetDir, numBuckets))
 
+  /** Both bucketed sinks' merge: the touched buckets (bounded by
+    * numBuckets, never by data) and their merged rows — the batch's
+    * highest-`versionCol` row per key over each bucket's `existing` dir.
+    * The bucket is RECOMPUTED from the key on read (partition dirs don't
+    * store it), keeping bucket routing a pure function of the key. */
+  private def mergeTouchedBuckets(batch: DataFrame, keyCol: String, versionCol: String,
+      numBuckets: Int)(existing: Int => Option[String]): (Array[Int], DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val bucket = pmod(hash(col(keyCol)), lit(numBuckets))
+    val latest = batch
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col(keyCol)).orderBy(col(versionCol).desc)))
+      .filter(col("__rn") === 1).drop("__rn")
+      .withColumn("__bucket", bucket)
+      .persistScoped()
+    val touched = latest.select("__bucket").distinct()
+      .collect().map(_.getInt(0)).sorted
+    val dirs = touched.flatMap(existing)
+    val merged =
+      if (dirs.isEmpty) latest
+      else batch.sparkSession.read.parquet(dirs.toIndexedSeq: _*)
+        .withColumn("__bucket", bucket)
+        .join(latest.select(col(keyCol)), Seq(keyCol), "left_anti")
+        .unionByName(latest)
+    (touched, merged.select(latest.columns.map(col).toIndexedSeq: _*))
+  }
+
   /** The per-batch merge of [[upsertToParquetBucketed]], callable
     * directly. */
   private[graft] def mergeIntoBucketedSnapshot(batch: DataFrame, keyCol: String,
       versionCol: String, targetDir: String, numBuckets: Int): Unit = {
     val spark = batch.sparkSession
-    import org.apache.spark.sql.expressions.Window
     import graft.connect.Hfs
     import org.apache.hadoop.fs.Path
     val fs = Hfs.fs(spark, targetDir)
@@ -315,33 +344,14 @@ object StreamOps {
         if (!Hfs.isDir(fs, cur) && Hfs.isDir(fs, prev))
           Hfs.renameChecked(fs, prev, cur, s"bucketed upsert recovery ($bd)")
       }
-    // 2. in-batch version resolution + bucket assignment
-    val latest = batch
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(keyCol)).orderBy(col(versionCol).desc)))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-      .persist()
-    // 3. touched buckets only — bounded by numBuckets, never by data
-    val touched = latest.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val existing = touched
-      .map(b => new Path(root, s"bucket=$b/current"))
-      .filter(Hfs.isDir(fs, _)).map(_.toString)
-    // 4. merge + one staged write of the touched buckets. The bucket
-    // column is RECOMPUTED from the key on read (partition dirs don't
-    // store it), keeping bucket routing a pure function of the key.
-    val merged =
-      if (existing.isEmpty) latest
-      else spark.read.parquet(existing.toIndexedSeq: _*)
-        .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-        .join(latest.select(col(keyCol)), Seq(keyCol), "left_anti")
-        .unionByName(latest)
+    // 2-4. in-batch version resolution, touched buckets, merge + one
+    // staged write of the touched buckets
+    val (touched, merged) = mergeTouchedBuckets(batch, keyCol, versionCol, numBuckets) { b =>
+      Some(new Path(root, s"bucket=$b/current")).filter(Hfs.isDir(fs, _)).map(_.toString)
+    }
     val staging = new Path(root, "staging")
     Hfs.deleteIfExists(fs, staging)
-    merged.select(latest.columns.map(col).toIndexedSeq: _*)
-      .write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
-    latest.unpersist()
+    merged.write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
     // 5. per-bucket checked swap
     touched.foreach { b =>
       val next = new Path(staging, s"__bucket=$b")
@@ -466,7 +476,6 @@ object StreamOps {
   private[graft] def mergeIntoManifestSnapshot(batch: DataFrame, keyCol: String,
       versionCol: String, targetDir: String, numBuckets: Int): Unit = {
     val spark = batch.sparkSession
-    import org.apache.spark.sql.expressions.Window
     import graft.connect.Hfs
     import org.apache.hadoop.fs.Path
     val fs = Hfs.fs(spark, targetDir)
@@ -475,29 +484,13 @@ object StreamOps {
     if (ver >= 0) require(storedNb == numBuckets,
       s"manifest snapshot at $targetDir was written with numBuckets=$storedNb; " +
         s"got $numBuckets — changing the bucket count requires a full rewrite")
-    val latest = batch
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(keyCol)).orderBy(col(versionCol).desc)))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-      .persist()
-    val touched = latest.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val existing = touched.flatMap(b => current.get(b))
-      .map(rel => new Path(root, rel).toString)
-    val merged =
-      if (existing.isEmpty) latest
-      else spark.read.parquet(existing.toIndexedSeq: _*)
-        .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-        .join(latest.select(col(keyCol)), Seq(keyCol), "left_anti")
-        .unionByName(latest)
+    val (touched, merged) = mergeTouchedBuckets(batch, keyCol, versionCol, numBuckets)(
+      b => current.get(b).map(rel => new Path(root, rel).toString))
     // deterministic gen dir: a replayed batch overwrites its own orphan
     val nextVer = ver + 1
     val genRel = s"data/v$nextVer"
-    merged.select(latest.columns.map(col).toIndexedSeq: _*)
-      .write.mode("overwrite").partitionBy("__bucket")
+    merged.write.mode("overwrite").partitionBy("__bucket")
       .parquet(new Path(root, genRel).toString)
-    latest.unpersist()
     // commit: write-once manifest, END last. Untouched buckets carry
     // their previous data dirs forward — their files never move.
     val entries = (current ++ touched.map(b => b -> s"$genRel/__bucket=$b")).toSeq

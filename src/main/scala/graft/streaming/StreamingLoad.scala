@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.CacheScope
 import graft.connect.Sources
 import graft.model.{ConnectionSpec, LoadStep}
 import graft.ops.{Dedup, Similarity, TextAnalysis}
@@ -187,18 +186,12 @@ object StreamingLoad {
           s"load '${step.name}': bm25Index layout requires parquet, got '${conn.format}'")
         // the streaming route reads the connection's options too
         val batchStep = step.copy(options = merged)
-        df.writeStream.foreachBatch { (b: DataFrame, bid: Long) =>
-          // the tick owns its terminal action, so its own scope drains
-          // the intermediates it persisted; a global drain would also
-          // drop those of a pipeline ticking concurrently in this JVM
-          CacheScope.scoped {
-            val admitted = tickPasses(b, bid, conn, merged)
-            if (bm25) TextAnalysis.maintainBm25Index(admitted, full, bid,
-              merged.get("bm25Buckets").map(_.toInt))
-            else Sources.write(admitted, conn, batchStep)
-          }
-          ()
-        }.outputMode("append")
+        StreamOps.toForeachBatch(df, "append") { (b, bid) =>
+          val admitted = tickPasses(b, bid, conn, merged)
+          if (bm25) TextAnalysis.maintainBm25Index(admitted, full, bid,
+            merged.get("bm25Buckets").map(_.toInt))
+          else Sources.write(admitted, conn, batchStep)
+        }
       case "append" =>
         df.writeStream.format(conn.format).option("path", full).outputMode("append")
       case other => throw new IllegalArgumentException(

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{GraftSession, Tables}
+import graft.{CacheScope, GraftSession, Tables}
+import graft.CacheScope.Scoped
 import graft.ops.{Dedup, Sharding, TextAnalysis}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   *   epoch-weighted replication → curriculum annealing order →
   *   mix_key shard write (orderCol = curriculum_key)
   *
-  * Since the curriculum stage landed, the mix is localCheckpoint'd
+  * Since the curriculum stage landed, the mix is cut (`cutScoped`)
   * before the write so `t_cur`/`t_shard` time THEIR plans, not a
   * replay of the replication.
   *
@@ -39,9 +40,8 @@ object MixChainBench {
       val a = f
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    def drop(): Unit = {
-      spark.sharedState.cacheManager.clearCache(); graft.CacheScope.drain()
-    }
+    // persists only: the stage inputs `kept` and `mix` are cuts (final drain)
+    def drop(): Unit = spark.sharedState.cacheManager.clearCache()
 
     val docs = Tables.t(spark, sfDir, "documents")
     val nDocs = docs.count()
@@ -60,7 +60,7 @@ object MixChainBench {
     // not a second component resolution
     val kept = Dedup.nearDupFilterOn(qual, keepBestByChars = true)
       .select($"doc_id", $"source", $"text")
-      .localCheckpoint()
+      .cutScoped()
     drop()
 
     val withToks = kept.withColumn("toks",
@@ -74,7 +74,7 @@ object MixChainBench {
     val mix = TextAnalysis.replicateByEpochs(withToks,
         TextAnalysis.epochWeightsForTokenTarget(withToks, 20000L))
       .withColumn("mix_key", Sharding.mixKey($"doc_id", $"rep"))
-      .localCheckpoint()
+      .cutScoped()
     drop()
 
     // curriculum stage (r12): the annealing sort key — quantile
@@ -98,7 +98,7 @@ object MixChainBench {
           $"phase", $"curriculum_key"),
         "mix_key", out, 16, orderCol = Some("curriculum_key"))
     }
-    drop()
+    CacheScope.drain()
     val nShard = spark.read.parquet(out).count()
 
     println(s"""{"sf_dir":"$sfDir","n_docs":$nDocs,"n_qual":$nQual,""" +

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Catalog, GraftSession}
+import graft.{CacheScope, Catalog, GraftSession}
 
 /** Single-query repeated timing (variance-aware companion to
   * graft.Bench): runs one catalog query N times in one JVM, printing
@@ -21,7 +21,7 @@ object QueryBench {
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
+      CacheScope.drain()
       println(f"[$i] $dt%.2f s")
       dt
     }

@@ -114,14 +114,18 @@ class CoverageSpec extends AnyFunSuite {
   test("one run boundary, one sink: cache scopes, cache() and the base-path rule") {
     def hits(re: scala.util.matching.Regex) =
       mainLines.filter(l => re.findFirstIn(l._3).isDefined)
-    // the two scopes the engine owns: a batch run and a streaming tick
+    // the two scopes the engine owns: a batch run and a micro-batch
     val scopes = hits("""CacheScope\.scoped\b""".r).map(_._1)
-    assert(scopes.sorted == Seq("exec/PipelineRunner.scala", "streaming/StreamingLoad.scala"),
+    assert(scopes.sorted == Seq("exec/PipelineRunner.scala", "streaming/StreamOps.scala"),
       s"CacheScope.scoped sites: $scopes")
-    val ticks = hits("""\.foreachBatch\b""".r).filter(_._1 == "streaming/StreamingLoad.scala")
-    assert(ticks.size == 1, s"StreamingLoad foreachBatch sites: $ticks")
+    val ticks = hits("""\.foreachBatch\b""".r)
+    assert(ticks.size == 1, s"foreachBatch sites: $ticks")
     val caches = hits("""\.cache\(\)""".r)
     assert(caches.isEmpty, s".cache() outside CacheScope: $caches")
+    // CacheScope is the one place that materializes or releases
+    val materialize = hits("""\.(persist|unpersist|localCheckpoint|checkpoint)\(""".r)
+    assert(materialize.isEmpty,
+      s"persist/unpersist/checkpoint outside CacheScope: ${materialize.map(l => s"${l._1}:${l._2}")}")
     // a read of a connection's base path, not Spark's reader option
     val baseReads = hits("""(get|getOrElse|contains|options)\("base(Path|Dir)"""".r)
     val outside = baseReads.filterNot { case (rel, line, _) =>

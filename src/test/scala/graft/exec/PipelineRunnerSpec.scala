@@ -182,12 +182,15 @@ class PipelineRunnerSpec extends SparkSpec {
     val (repo, dataDir) = setup()
     val registry = new TransformRegistry
     registry.register("persist_input", df => df.filter($"amount" > 0).persistScoped())
+    registry.register("cut_input", df =>
+      graft.ops.lineageCut(df.filter($"amount" > 0), reliable = false))
     val landed = tmpDir("graft-landed")
     Seq((5L, "c", 50.0), (6L, "c", 60.0)).toDF("id", "tag", "amount")
       .coalesce(1).write.mode("overwrite").parquet(landed.toString)
     val landedFile = landed.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
     val runner = new PipelineRunner(spark, repo, registry)
-    val kinds = Seq(""""kind":"named","transformName":"persist_input"""", """"kind":"cache"""")
+    val kinds = Seq(""""kind":"named","transformName":"persist_input"""", """"kind":"cache"""",
+      """"kind":"named","transformName":"cut_input"""")
     kinds.zipWithIndex.foreach { case (kind, i) =>
       spark.read.parquet(s"$dataDir/src").write.parquet(s"$dataDir/src$i")
       val spec = pipeline(

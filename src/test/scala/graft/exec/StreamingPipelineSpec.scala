@@ -87,6 +87,26 @@ class StreamingPipelineSpec extends SparkSpec {
     // id 2 upserted to ver 3, id 4 inserted
     assert(snap2.toSeq == Seq(
       (1L, 1L, "A", 20.0), (2L, 3L, "B2", 198.0), (3L, 1L, "C", 60.0), (4L, 1L, "D", 80.0)))
+
+    // a tick whose merge fails (an unreadable file in every snapshot
+    // bucket) still releases what its micro-batch persisted
+    new java.io.File(s"$dataDir/snapshot").listFiles()
+      .filter(_.getName.startsWith("bucket=")).foreach { b =>
+        java.nio.file.Files.write(new java.io.File(b, "current/part-bad.parquet").toPath,
+          "not parquet".getBytes)
+      }
+    Seq((1L, "a3", 2L, 11.0), (2L, "b3", 4L, 12.0), (3L, "c3", 2L, 13.0), (4L, "d3", 2L, 14.0))
+      .toDF("id", "tag", "ver", "amount")
+      .coalesce(1).write.mode("append").parquet(s"$dataDir/landing")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val sched3 = new PipelineScheduler(new PipelineRunner(spark, repo), repo, () => now, 1)
+    assert(sched3.tick().isEmpty)
+    now = Instant.parse("2026-03-01T08:45:05Z")
+    assert(sched3.tick() == Seq("cdc"))
+    sched3.stop()
+    assert(repo.history("cdc").map(_.status).last == "error")
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- persistedBefore
+    assert(left.isEmpty, s"the failed upsert tick left $left persisted")
   }
 
   test("streaming curation: frozen-model filter + shard-append load across two ticks") {

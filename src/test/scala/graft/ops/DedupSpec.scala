@@ -98,6 +98,18 @@ class DedupSpec extends SparkSpec {
       "fixture grew docs beyond the ceiling — gate rows would silently shrink")
   }
 
+  private def persistentRdds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** After `connectedComponents` returns, the loop holds its two inputs
+    * (the symmetrized edges and the initial labels) plus the final
+    * round's cut, whatever its round count; a drain releases them. */
+  private def assertHoldsOneRound(before: Set[Int]): Unit = {
+    val held = persistentRdds() -- before
+    assert(held.size == 3, s"connectedComponents left ${held.size} persisted RDDs: $held")
+    graft.CacheScope.drain()
+    assert((persistentRdds() -- before).isEmpty, "a drain left cut RDDs persisted")
+  }
+
   test("connectedComponents resolves a 6-link chain (diameter > ccRounds) to one component") {
     import spark.implicits._
     // 1-2-3-4-5-6-7 chain: fixed 3-round propagation CANNOT fully
@@ -105,9 +117,11 @@ class DedupSpec extends SparkSpec {
     val nodes = (1L to 9L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L),
       (8L, 9L)).toDF("src", "dst")
+    val before = persistentRdds()
     val labels = Dedup.connectedComponents(spark, nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 7L).forall(labels(_) == 1L), s"chain not fully resolved: $labels")
+    assertHoldsOneRound(before)
     assert(labels(8L) == 8L && labels(9L) == 8L)
     // and it agrees with the fixed-round variant's semantics on a clique
     val cliqueEdges = Seq((10L, 11L), (11L, 12L), (10L, 12L)).toDF("src", "dst")
@@ -133,10 +147,12 @@ class DedupSpec extends SparkSpec {
     try {
       val nodes = (1L to 21L).toDF("id")
       val edges = (1L until 21L).map(i => (i, i + 1)).toDF("src", "dst")
+      val before = persistentRdds()
       val labels = Dedup.connectedComponents(spark, nodes, edges,
         checkpointDir = Some(dir.getAbsolutePath))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((1L to 21L).forall(labels(_) == 1L), s"chain not fully resolved: $labels")
+      assertHoldsOneRound(before)
       def files(f: java.io.File): Seq[java.io.File] = {
         val kids = Option(f.listFiles).map(_.toSeq).getOrElse(Seq.empty)
         kids.filter(_.isFile) ++ kids.filter(_.isDirectory).flatMap(files)
@@ -199,6 +215,7 @@ class DedupSpec extends SparkSpec {
       (5L, "a stitch in time saves nine they always said"),
       (6L, "colorless green ideas sleep furiously every night"),
       (7L, "pack my box with five dozen liquor jugs today")).toDF("doc_id", "text")
+    val before = persistentRdds()
     val (kept, m) = graft.exec.SparkMetrics.measure(spark) {
       Dedup.nearDupFilterOn(docs).select($"doc_id").as[Long].collect().toSet
     }
@@ -208,6 +225,13 @@ class DedupSpec extends SparkSpec {
     // cores): more means a CC round or the keep tail grew a job or an
     // exchange
     assert(m.stages <= 29, s"nearDupFilterOn ran ${m.stages} stages")
+    // a drain releases the loop's cuts along with its persists, call
+    // after call
+    for (i <- 1 to 3) {
+      if (i > 1) { Dedup.nearDupFilterOn(docs).collect(); graft.CacheScope.drain() }
+      val left = persistentRdds() -- before
+      assert(left.isEmpty, s"call $i: $left persisted after a drain")
+    }
   }
 
   test("pigeonhole blocks: every 16-bit pair at hamming <= 4 shares a block") {

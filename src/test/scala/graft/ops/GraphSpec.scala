@@ -333,15 +333,24 @@ class GraphSpec extends SparkSpec {
     // enough rounds only the triangle remains, every member at degree 2.
     val g = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 10L), (10L, 11L), (11L, 12L))
       .toDF("src", "dst")
+    // each call holds only its final round's cut, and a drain releases it
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistent
+    def kcore(rounds: Int): Map[Long, Long] = {
+      val out = Graph.kcoreOf(g, 2, rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert((persistent -- before).size == 1, s"$rounds rounds held ${persistent -- before}")
+      graft.CacheScope.drain()
+      assert((persistent -- before).isEmpty, s"$rounds rounds left ${persistent -- before}")
+      out
+    }
     // not yet converged after 2 rounds: node 10 still present
-    val partial = Graph.kcoreOf(g, 2, 2).collect().map(_.getLong(0)).toSet
+    val partial = kcore(2).keySet
     assert(partial.contains(10L))
-    val core = Graph.kcoreOf(g, 2, 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val core = kcore(3)
     assert(core == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
     // round 4 (the catalog setting) is a fixpoint on this graph
-    val again = Graph.kcoreOf(g, 2, 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val again = kcore(4)
     assert(again == core)
   }
 }

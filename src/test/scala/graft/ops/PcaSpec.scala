@@ -50,15 +50,22 @@ class PcaSpec extends SparkSpec {
         else ((i * 3 + j * 7) % 5 - 2) * 0.001f
       })
     }
-    val out = Similarity.pcaTopKOn(spark, vecsToDf(rows), k = 2, rounds = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(math.abs(out((1L, 2L))) == 1000L, s"c1 must saturate axis 2: $out")
-    assert(math.abs(out((2L, 5L))) == 1000L, s"c2 must saturate axis 5: $out")
-    (1 to d).filter(_ != 2).foreach(j =>
-      assert(math.abs(out((1L, j.toLong))) < 150L, s"c1 off-axis $j: ${out((1L, j.toLong))}"))
-    (1 to d).filter(_ != 5).foreach(j =>
-      assert(math.abs(out((2L, j.toLong))) < 150L, s"c2 off-axis $j: ${out((2L, j.toLong))}"))
-    graft.CacheScope.drain()
+    // components are trained in order, so c1 and c2 do not depend on
+    // k; each k's deflation cuts are released by a drain
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    for (k <- 2 to 4) {
+      val before = persistent
+      val out = Similarity.pcaTopKOn(spark, vecsToDf(rows), k = k, rounds = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(math.abs(out((1L, 2L))) == 1000L, s"c1 must saturate axis 2: $out")
+      assert(math.abs(out((2L, 5L))) == 1000L, s"c2 must saturate axis 5: $out")
+      (1 to d).filter(_ != 2).foreach(j =>
+        assert(math.abs(out((1L, j.toLong))) < 150L, s"c1 off-axis $j: ${out((1L, j.toLong))}"))
+      (1 to d).filter(_ != 5).foreach(j =>
+        assert(math.abs(out((2L, j.toLong))) < 150L, s"c2 off-axis $j: ${out((2L, j.toLong))}"))
+      graft.CacheScope.drain()
+      assert((persistent -- before).isEmpty, s"k=$k left ${persistent -- before} persisted")
+    }
   }
 
   test("centering: a constant shift of every vector leaves the component unchanged") {
